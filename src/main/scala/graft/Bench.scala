@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
   *
@@ -23,37 +21,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default matches the driver's harness (local[32], shuffle
-    // partitions 32) so un-prefixed local runs measure the same mode
-    // the per-round BENCH artifacts record — the r12 decade-3 session
-    // burned hours benchmarking at a silent local[4]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE coalescing floor, env-overridable for experiments; default
-      // is Spark's own 1m. A 64k floor was tried (the audit families'
-      // per-pair aggregates are a few MB of shuffle carrying 5-10
-      // CPU-seconds, and byte-based coalescing ran them 1-5 wide on 32
-      // cores) and MEASURED A NET LOSS r15: every iterative graph query
-      // pays per-round shuffles whose un-coalesced tiny tasks cost more
-      // in scheduling + localCheckpoint width than the extra audit
-      // parallelism earns (14-query A/B: 133.3 s at 64k vs 95.5 s at
-      // 1m — q_hits +7.8 s, q_scc +4.6 s, q_pagerank +4.1 s, while the
-      // intended beneficiary text_champ_recall_floor moved -0.7 s).
-      // CPU-dense narrow stages get their width from the targeted
-      // [[operators.CpuStage.fanOut]] floor instead.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "1m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietDeclaredBoundedWindows()
+    // every capture states its mode ("cpus" in the line and sidecar): the
+    // default is the core count, SPARK_GRAFT_CPUS overrides it
+    val cpus = GraftSession.defaultCpus
+    // AQE minPartitionSize stays at Spark's 1m: a 64k floor measured a net
+    // loss r15 (133.3 s vs 95.5 s on 14 queries; see CpuStage.fanOut)
+    val spark = GraftSession.local(cpus)
     val telemetry = ShuffleTelemetry.install(spark)
     // warm-up: touch every table once so no query's time includes
     // first-scan/codec/JVM initialization
@@ -90,24 +63,7 @@ object Bench {
     // (ADVICE r15: sampling before it recorded pre-canary machine state,
     // not the conditions the first query actually starts under)
     val loadBefore = loadavg()
-    // contention self-diagnosis (VERDICT r15 #2: the graded r15 capture
-    // started at load 10.17 with canary 1.33-1.91 and recorded a 16x
-    // "regression" with zero plan delta — a capture must DECLARE itself
-    // contaminated instead of leaving the reader to reconstruct it).
-    // Thresholds: the frozen canary reads 0.85-1.18 s on this box idle
-    // (r14/r15 clean captures); >1.25x the 1.10 s clean midpoint, or a
-    // 1-min load already above half the requested cores before the
-    // first query, marks the capture contended. ADDITIVE field only —
-    // nothing is skipped or retimed, the flag just travels with the
-    // numbers so PERF_r16 can discount a hot capture.
-    val canaryCleanRef = 1.10
-    def isContended(c: Double, load: String): Boolean = {
-      val hotCanary = c > 1.25 * canaryCleanRef
-      val hotLoad = load.split(",").headOption.flatMap(_.toDoubleOption)
-        .exists(_ > cpus.toDouble / 2)
-      hotCanary || hotLoad
-    }
-    val contendedStart = isContended(canaryStart, loadBefore)
+    val contendedStart = isContended(canaryStart, loadBefore, cpus)
     // optional subset for fast local iteration: SPARK_GRAFT_ONLY=q1,q2;
     // SPARK_GRAFT_SKIP excludes named queries (full-set captures on
     // boxes without headroom for a known disk-bound query — the skipped
@@ -213,10 +169,15 @@ object Bench {
     def failedJson(names: Seq[String]): String =
       names.map("\"" + _ + "\"").mkString("[", ",", "]")
     // contended if EITHER bracket was hot: a capture that started clean
-    // and ended hot still has its late-alphabet queries inflated
-    val contended = contendedStart || isContended(canaryEnd, loadAfter)
+    // and ended hot still has its late-alphabet queries inflated; a failed
+    // canary leaves a clean-load capture "unknown", never clean
+    val brackets = Seq(contendedStart, isContended(canaryEnd, loadAfter, cpus))
+    val contended =
+      if (brackets.contains(Some(true))) "true"
+      else if (brackets.contains(None)) "\"unknown\""
+      else "false"
     val pw = new java.io.PrintWriter(detailFile, "UTF-8")
-    try pw.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"times":$ts,"shuffle_bytes":$sh,"failed":${failedJson(failedNames)},"skipped":${failedJson(skip.toSeq.sorted)},"canary":[${r2(canaryStart)},${r2(canaryEnd)}],"contended":$contended,"load":[$loadBefore],"load_after":[$loadAfter],"sf":"$sfDir","runs":$runs}""")
+    try pw.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"times":$ts,"shuffle_bytes":$sh,"failed":${failedJson(failedNames)},"skipped":${failedJson(skip.toSeq.sorted)},"canary":[${r2(canaryStart)},${r2(canaryEnd)}],"contended":$contended,"load":[$loadBefore],"load_after":[$loadAfter],"sf":"$sfDir","runs":$runs,"cpus":$cpus}""")
     finally pw.close()
     val slow = results.sortBy(-_._2).take(25)
       .map { case (k, v, _) => "\"" + k + "\":" + r2(v) }.mkString("{", ",", "}")
@@ -226,7 +187,28 @@ object Bench {
     // precisely when the marker matters most; failed_count carries the
     // true total and the sidecar the full list.
     val failedShown = failedJson(failedNames.take(8))
-    println(s"""{"metric":"total","value":${r2(total)},"unit":"sec","n_queries":${results.size},"queries":$slow,"queries_note":"slowest 25 of ${results.size}; full map in detail file","detail":"${detailFile.getAbsolutePath}","failed":$failedShown,"failed_count":${failedNames.size},"canary":[${r2(canaryStart)},${r2(canaryEnd)}],"contended":$contended,"load":[$loadBefore],"load_after":[$loadAfter],"sf":"$sfDir","runs":$runs}""")
+    println(s"""{"metric":"total","value":${r2(total)},"unit":"sec","n_queries":${results.size},"queries":$slow,"queries_note":"slowest 25 of ${results.size}; full map in detail file","detail":"${detailFile.getAbsolutePath}","failed":$failedShown,"failed_count":${failedNames.size},"canary":[${r2(canaryStart)},${r2(canaryEnd)}],"contended":$contended,"load":[$loadBefore],"load_after":[$loadAfter],"sf":"$sfDir","runs":$runs,"cpus":$cpus}""")
     spark.stop()
+  }
+
+  /** The frozen canary's clean midpoint: it reads 0.85-1.18 s on an idle
+    * box (r14/r15 clean captures). */
+  private val CanaryCleanRef = 1.10
+
+  /** Contention self-diagnosis for one capture bracket (VERDICT r15 #2: a
+    * capture that started at load 10.17 recorded a 16x "regression" with
+    * zero plan delta — a capture must DECLARE itself contaminated).
+    * Some(true) when the canary reads >1.25x its clean midpoint or the
+    * 1-min load is above half the requested cores; None when the canary
+    * failed (its -1 sentinel) and the load is not hot, since a broken
+    * instrument proves nothing clean; else Some(false). ADDITIVE only —
+    * nothing is skipped or retimed, the flag travels with the numbers.
+    */
+  private[graft] def isContended(canary: Double, load: String, cpus: Int): Option[Boolean] = {
+    val hotLoad = load.split(",").headOption.flatMap(_.toDoubleOption)
+      .exists(_ > cpus.toDouble / 2)
+    if (hotLoad || canary > 1.25 * CanaryCleanRef) Some(true)
+    else if (canary < 0) None
+    else Some(false)
   }
 }

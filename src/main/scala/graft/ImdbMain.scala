@@ -18,12 +18,7 @@ import graft.sources.Sources
 object ImdbMain {
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args)
-    val spark = SparkSession.builder()
-      .appName("graft-imdb-etl")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.submit("graft-imdb-etl")
     run(spark, opts)
   }
 

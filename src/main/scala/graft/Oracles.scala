@@ -6339,4 +6339,47 @@ object Oracles {
        |  count(DISTINCT media_id) AS n_media, max(len) AS chunk_bytes
        |FROM hx GROUP BY chunk_hex""".stripMargin
   }
+
+  // ---- literal twins of the ETL, dedup and streaming queries ----
+
+  def srcJsonlRoundtrip: String =
+    "SELECT doc_id, text, n_chars FROM documents"
+
+  def sinkCompact: String =
+    "SELECT event_type, CAST(count(*) AS BIGINT) AS n FROM events GROUP BY event_type"
+
+  // the estimate is certified, not reproduced: the twin asserts the
+  // within-band flag TRUE next to the exact distinct, so HLL drift
+  // past the documented bound is a loud hash FAIL
+  def qApproxDistinct: String =
+    """SELECT CAST(year(o_orderdate) AS BIGINT) AS yearkey,
+      |  CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_cust_exact,
+      |  TRUE AS est_within_band
+      |FROM orders GROUP BY 1""".stripMargin
+
+  def dedupExact: String =
+    "SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_dups FROM documents GROUP BY md5(text)"
+
+  def dedupSourceStats: String =
+    "SELECT source, CAST(count(*) AS BIGINT) AS n_docs, CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_unique, CAST(1000000 * (count(*) - count(DISTINCT md5(text))) // count(*) AS BIGINT) AS dup_ppm FROM documents GROUP BY source"
+
+  def streamIdempotentSinkReplay: String =
+    """SELECT event_id, user_id, event_type, epoch_ms(ts) AS ts_ms,
+      |  CAST(floor(value * 100) AS BIGINT) AS cents FROM events""".stripMargin
+
+  def streamEnrichReplay: String =
+    """SELECT event_id, user_id,
+      |  CASE WHEN event_type <> 'error' THEN 'cat_' || event_type END AS category
+      |FROM events""".stripMargin
+
+  def streamTopkReplay: String =
+    s"""SELECT event_type, rnk, event_id, cents FROM (
+       |  SELECT event_type, event_id,
+       |    CAST(floor(value * 100) AS BIGINT) AS cents,
+       |    CAST(row_number() OVER (PARTITION BY event_type
+       |      ORDER BY value DESC, event_id) AS BIGINT) AS rnk
+       |  FROM events) WHERE rnk <= ${Params.TopNPerGroup}""".stripMargin
+
+  def eventsJsonParse: String =
+    "SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events"
 }

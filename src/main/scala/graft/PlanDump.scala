@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Print the analyzed/executed physical plan of named registry queries —
   * the `.explain("formatted")` loop as a main, for eyeballing exchange
   * reuse, join strategies, and pushdown on any query without editing
@@ -21,16 +19,7 @@ object PlanDump {
         s"(${SparkEntry.queries.size} registered — see README index)")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Logs.quietDeclaredBoundedWindows()
+    val spark = GraftSession.local()
     names.foreach { name =>
       println(s"==== $name")
       SparkEntry.queries(name)(spark, dir).explain("formatted")

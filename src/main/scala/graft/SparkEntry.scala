@@ -148,10 +148,33 @@ object SparkEntry {
       emb.where(col("vec_id") % AnnQueryMod === 0), "vec_id",
       AnnQueryBudget, "vec_id")), Seq("vec_id"))
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One registered query: its Spark plan and its DuckDB twin — equivalent
+    * SQL over the same parquet tables (SURVEY.md §6). The twin is by-name,
+    * so building the registry never initializes [[Oracles]].
+    */
+  private[graft] final class Query(oracle: => String,
+                                   val run: (SparkSession, String) => DataFrame) {
+    def oracleSql: String = oracle
+  }
+
+  private def Q(oracle: => String)(run: (SparkSession, String) => DataFrame): Query =
+    new Query(oracle, run)
+
+  /** Every query's run function, by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (k, e) => k -> e.run }.toMap
+
+  /** Every query's DuckDB twin, by name. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map { case (k, e) => k -> e.oracleSql }.toMap
+
+  /** One entry per implemented operator from SURVEY.md §2, in section
+    * order. A Seq, not a Map literal, so a repeated name is caught by
+    * RegistrySpec instead of silently keeping the last entry.
+    */
+  private[graft] val registry: Seq[(String, Query)] = Seq(
     // ---- §2.1 ETL core ----
-    "src_csv_roundtrip" -> ((s, dir) => {
+    "src_csv_roundtrip" -> Q(Oracles.srcCsvRoundtrip)((s, dir) => {
       val tmp = tmpPath(s, "csv_roundtrip")
       t(s, dir, "customer").select(col("c_custkey"), col("c_name"), col("c_nationkey"), col("c_mktsegment"))
         .write.mode("overwrite").option("header", "true").csv(tmp)
@@ -159,14 +182,14 @@ object SparkEntry {
         .schema("c_custkey LONG, c_name STRING, c_nationkey INT, c_mktsegment STRING")
         .csv(tmp)
     }),
-    "src_jsonl_roundtrip" -> ((s, dir) => {
+    "src_jsonl_roundtrip" -> Q(Oracles.srcJsonlRoundtrip)((s, dir) => {
       val tmp = tmpPath(s, "jsonl_roundtrip")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"), col("n_chars"))
       sources.Sources.writeJsonl(docs, tmp)
       sources.Sources.readJsonl(s, tmp,
         org.apache.spark.sql.types.StructType.fromDDL("doc_id LONG, text STRING, n_chars LONG"))
     }),
-    "sink_compact" -> ((s, dir) => {
+    "sink_compact" -> Q(Oracles.sinkCompact)((s, dir) => {
       // fragment events into 64 tiny files, compact, and prove the data
       // survives byte-exactly via the aggregate's oracle
       val tmp = tmpPath(s, "compact")
@@ -176,7 +199,7 @@ object SparkEntry {
       require(after < before, s"compaction must shrink the file count ($before -> $after)")
       s.read.parquet(tmp).groupBy(col("event_type")).agg(count(lit(1)).as("n"))
     }),
-    "stage_clean" -> ((s, dir) => {
+    "stage_clean" -> Q(Oracles.stageClean)((s, dir) => {
       val ev = Staging.castColumns(t(s, dir, "events"), Map.empty)
       EventOps.extractIntField(ev, "props", "k")
         .filter(col("event_type") =!= "error")
@@ -184,16 +207,16 @@ object SparkEntry {
           expr("nullif(event_type, 'view')").as("event_type_clean"),
           cents(col("value")).as("value_cents"), col("k"))
     }),
-    "stage_dedup_key" -> ((s, dir) =>
+    "stage_dedup_key" -> Q(Oracles.stageDedupKey)((s, dir) =>
       Staging.dedupByKeyKeepFirst(t(s, dir, "orders"), Seq("o_custkey"),
           Seq(col("o_orderdate"), col("o_orderkey")))
         .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))),
-    "dim_distinct" -> ((s, dir) =>
+    "dim_distinct" -> Q(Oracles.dimDistinct)((s, dir) =>
       Star.dimFromColumn(t(s, dir, "customer"), col("c_mktsegment"), "segkey")),
-    "dim_explode_bridge" -> ((s, dir) =>
+    "dim_explode_bridge" -> Q(Oracles.dimExplodeBridge)((s, dir) =>
       Star.explodeBridge(t(s, dir, "part"), col("p_partkey"), col("p_name"), " ",
         "p_partkey", "word")._2),
-    "fact_join" -> ((s, dir) =>
+    "fact_join" -> Q(Oracles.factJoin)((s, dir) =>
       Star.fact(t(s, dir, "orders"), broadcast(t(s, dir, "customer"))
           .withColumnRenamed("c_custkey", "o_custkey"),
         Seq("o_custkey"), Seq(
@@ -201,13 +224,13 @@ object SparkEntry {
           year(col("o_orderdate")).cast("long").as("yearkey"),
           cents(col("o_totalprice")).as("price_cents"),
           col("c_mktsegment").as("segment")))),
-    "mart_kpi_year" -> ((s, dir) =>
+    "mart_kpi_year" -> Q(Oracles.martKpiYear)((s, dir) =>
       Marts.kpiByGroup(t(s, dir, "orders"),
         year(col("o_orderdate")).cast("long"), "yearkey", Seq(
           count(lit(1)).as("n_orders"),
           round(avg(col("o_totalprice")), 4).as("mean_price"),
           sum(cents(col("o_totalprice"))).as("total_cents")))),
-    "mart_top_per_group" -> ((s, dir) =>
+    "mart_top_per_group" -> Q(Oracles.martTopPerGroup)((s, dir) =>
       Marts.topNPerGroup(
           t(s, dir, "orders").join(broadcast(t(s, dir, "customer")),
             col("o_custkey") === col("c_custkey")),
@@ -215,7 +238,7 @@ object SparkEntry {
           Seq(cents(col("o_totalprice")).desc, col("o_orderkey").asc), TopNPerGroup)
         .select(col("c_mktsegment").as("segment"), col("o_orderkey").as("factkey"),
           cents(col("o_totalprice")).as("price_cents"), col("rk"))),
-    "mart_top_threshold" -> ((s, dir) =>
+    "mart_top_threshold" -> Q(Oracles.martTopThreshold)((s, dir) =>
       Marts.topNPerGroup(
           t(s, dir, "orders").join(broadcast(t(s, dir, "customer")),
             col("o_custkey") === col("c_custkey")),
@@ -224,7 +247,7 @@ object SparkEntry {
           Some(col("o_totalprice") >= TopThreshold))
         .select(col("c_mktsegment").as("segment"), col("o_orderkey").as("factkey"),
           cents(col("o_totalprice")).as("price_cents"), col("rk"))),
-    "mart_top_agg" -> ((s, dir) =>
+    "mart_top_agg" -> Q(Oracles.martTopPerGroup)((s, dir) =>
       operators.TopKAggregate.topK[Long, Long](
           t(s, dir, "orders").join(broadcast(t(s, dir, "customer")),
             col("o_custkey") === col("c_custkey")),
@@ -232,12 +255,12 @@ object SparkEntry {
           cents(col("o_totalprice")), col("o_orderkey"), TopNPerGroup,
           "factkey", "price_cents")
         .select(col("segment"), col("factkey"), col("price_cents"), col("rk"))),
-    "mart_histogram" -> ((s, dir) =>
+    "mart_histogram" -> Q(Oracles.martHistogram)((s, dir) =>
       Marts.histogram(t(s, dir, "orders"),
           Seq(year(col("o_orderdate")).cast("long").as("yearkey")),
           col("o_totalprice"), HistWidth)
         .select(col("yearkey"), col("bucket"), col("n"))),
-    "sink_partitioned_write" -> ((s, dir) => {
+    "sink_partitioned_write" -> Q(Oracles.factJoin)((s, dir) => {
       val tmp = tmpPath(s, "sink_partitioned")
       queries("fact_join")(s, dir)
         .write.mode("overwrite").partitionBy("yearkey").parquet(tmp)
@@ -246,7 +269,7 @@ object SparkEntry {
           col("price_cents"), col("segment"))
     }),
 
-    "src_orc_roundtrip" -> ((s, dir) => {
+    "src_orc_roundtrip" -> Q(Oracles.srcOrcRoundtrip)((s, dir) => {
       // ORC is Spark's other first-class columnar format (predicate
       // pushdown + column pruning work the same as parquet); the
       // roundtrip proves values survive bit-exactly, including an
@@ -257,7 +280,7 @@ object SparkEntry {
         .write.mode("overwrite").orc(tmp)
       s.read.orc(tmp)
     }),
-    "src_merge_schema" -> ((s, dir) => {
+    "src_merge_schema" -> Q(Oracles.srcMergeSchema)((s, dir) => {
       // schema evolution: a landing zone written by two producer versions
       // (v2 added a column) read as ONE table via mergeSchema — the
       // missing column is null-filled, nothing is dropped or re-written.
@@ -279,13 +302,13 @@ object SparkEntry {
     // full reference pipeline composition under the oracle gate: raw
     // IMDb-shaped strings (with \N markers) → staging → dims/bridge/fact
     // → marts, all inside ImdbPipeline.run
-    "imdb_pipeline" -> ((s, dir) => {
+    "imdb_pipeline" -> Q(Oracles.imdbPipelineKpi)((s, dir) => {
       val out = imdbRun(t(s, dir, "part"))
       out.martYearKpi.select(col("yearkey").cast("long").as("yearkey"),
         col("n_movies"), round(col("mean_rating"), 4).as("mean_rating"),
         col("total_votes").cast("long").as("total_votes"))
     }),
-    "imdb_top_genre" -> ((s, dir) => {
+    "imdb_top_genre" -> Q(Oracles.imdbTopGenre)((s, dir) => {
       val out = imdbRun(t(s, dir, "part"))
       out.martTopGenreYear.select(col("yearkey").cast("long").as("yearkey"),
         col("genrekey"), col("titlekey"), round(col("avg_rating"), 4).as("avg_rating"),
@@ -293,7 +316,7 @@ object SparkEntry {
     }),
 
     // ---- §2.2 TPC-H style ----
-    "q1_pricing_summary" -> ((s, dir) =>
+    "q1_pricing_summary" -> Q(Oracles.q1PricingSummary)((s, dir) =>
       t(s, dir, "lineitem")
         .filter(col("l_shipdate") <= ts(Q1Cutoff))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -306,7 +329,7 @@ object SparkEntry {
           round(avg(col("l_extendedprice")), 4).as("avg_price"),
           round(avg(col("l_discount")), 4).as("avg_disc"),
           count(lit(1)).as("count_order"))),
-    "q3_shipping_priority" -> ((s, dir) =>
+    "q3_shipping_priority" -> Q(Oracles.q3ShippingPriority)((s, dir) =>
       t(s, dir, "customer").filter(col("c_mktsegment") === Q3Segment)
         .join(t(s, dir, "orders").filter(col("o_orderdate") < ts(Q3Date)),
           col("c_custkey") === col("o_custkey"))
@@ -316,7 +339,7 @@ object SparkEntry {
         .agg(sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount")))).as("revenue_cents"))
         .orderBy(col("revenue_cents").desc, col("orderkey").asc)
         .limit(10)),
-    "q5_local_supplier" -> ((s, dir) => {
+    "q5_local_supplier" -> Q(Oracles.q5LocalSupplier)((s, dir) => {
       val nation = broadcast(t(s, dir, "nation"))
       val region = broadcast(t(s, dir, "region").filter(col("r_name") === Q5Region))
       t(s, dir, "customer")
@@ -331,23 +354,23 @@ object SparkEntry {
         .groupBy(col("n_name"))
         .agg(sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount")))).as("revenue_cents"))
     }),
-    "q_anti_join" -> ((s, dir) =>
+    "q_anti_join" -> Q(Oracles.qAntiJoin)((s, dir) =>
       t(s, dir, "customer")
         .join(t(s, dir, "orders").filter(col("o_orderstatus") === "P"),
           col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))),
-    "q_semi_join" -> ((s, dir) =>
+    "q_semi_join" -> Q(Oracles.qSemiJoin)((s, dir) =>
       t(s, dir, "customer")
         .join(t(s, dir, "orders").filter(col("o_orderstatus") === "P"),
           col("c_custkey") === col("o_custkey"), "left_semi")
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))),
-    "q_unpivot" -> ((s, dir) =>
+    "q_unpivot" -> Q(Oracles.qUnpivot)((s, dir) =>
       // wide → long re-shaping of the static pivot (Spark 4 melt);
       // narrow op, no shuffle beyond the pivot's own
       EventOps.dailyPivot(t(s, dir, "events"), "ts", "event_type", EventTypes)
         .unpivot(Array(col("y"), col("m"), col("d")),
           EventTypes.map(col).toArray, "event_type", "n")),
-    "q_cusum" -> ((s, dir) => {
+    "q_cusum" -> Q(Oracles.qCusum)((s, dir) => {
       // integer CUSUM change detection over the monthly series: track
       // S⁺ = max(0, S⁺ + (x − ref)) and S⁻ = max(0, S⁻ + (ref − x))
       // around the series' own integer mean; a month where either side
@@ -374,7 +397,7 @@ object SparkEntry {
         .select(col("mkey"), col("total_cents"), col("cusum_hi"), col("cusum_lo"),
           (col("cusum_hi") > col("ref") || col("cusum_lo") > col("ref")).as("shift"))
     }),
-    "q_acf" -> ((s, dir) => {
+    "q_acf" -> Q(Oracles.qAcf)((s, dir) => {
       // exact-integer autocorrelation of the monthly revenue series at
       // lags 1..AcfMaxLag: with S = Σx and n months, the identity
       // n²(x_t−x̄)(x_{t+k}−x̄) = (n·x_t−S)(n·x_{t+k}−S) keeps every
@@ -391,7 +414,7 @@ object SparkEntry {
       operators.TimeSeries.acf(monthly, AcfMaxLag)
     }),
 
-    "q_seasonal" -> ((s, dir) => {
+    "q_seasonal" -> Q(Oracles.qSeasonal)((s, dir) => {
       // calendar-seasonality split of monthly revenue: per month-of-year
       // integer baseline (Σ div n) + deseasonalized residual, exact cents
       val monthly = t(s, dir, "orders")
@@ -401,7 +424,7 @@ object SparkEntry {
       operators.TimeSeries.seasonalBaseline(monthly, 12)
     }),
 
-    "q_holt" -> ((s, dir) =>
+    "q_holt" -> Q(Oracles.qHolt)((s, dir) =>
       // Holt double smoothing over the monthly revenue series — level +
       // trend + one-step forecast, exact-integer (TimeSeries.holtSmooth)
       operators.TimeSeries.holtSmooth(
@@ -413,7 +436,7 @@ object SparkEntry {
         .withColumnRenamed("level", "level_cents")
         .withColumnRenamed("trend", "trend_cents")
         .withColumnRenamed("forecast", "forecast_cents")),
-    "q_holt_winters" -> ((s, dir) =>
+    "q_holt_winters" -> Q(Oracles.qHoltWinters)((s, dir) =>
       // Holt–Winters triple smoothing, annual (period-12) seasonality
       // over the same monthly revenue series as q_holt
       operators.TimeSeries.holtWinters(
@@ -426,7 +449,7 @@ object SparkEntry {
         .withColumnRenamed("trend", "trend_cents")
         .withColumnRenamed("seasonal", "seasonal_cents")
         .withColumnRenamed("forecast", "forecast_cents")),
-    "q_trend_fit" -> ((s, dir) =>
+    "q_trend_fit" -> Q(Oracles.qTrendFit)((s, dir) =>
       // per-priority monthly-revenue OLS trend: slope in ppm-cents per
       // month, intercept in cents — exact rational closed form
       operators.TimeSeries.trendFit(
@@ -436,13 +459,13 @@ object SparkEntry {
               .cast("long").as("mkey"))
           .agg(sum(cents(col("o_totalprice"))).as("total_cents")),
         "o_orderpriority", "mkey", "total_cents")),
-    "sample_temperature" -> ((s, dir) =>
+    "sample_temperature" -> Q(Oracles.sampleTemperature)((s, dir) =>
       // α=1/2 domain-rebalanced sample of documents by source mass
       Sampling.temperatureSample(t(s, dir, "documents"), "source",
           col("doc_id"), col("n_chars"), TempBudgetPct, "graft-temp")
         .select(col("doc_id"), col("source"), col("n_chars"),
           col("w_ppm"), col("rate_ppm"))),
-    "q_drift_chi2" -> ((s, dir) => {
+    "q_drift_chi2" -> Q(Oracles.qDriftChi2)((s, dir) => {
       // price-distribution drift between two order-year snapshots:
       // χ² over fixed-width 50k-cent buckets (the mart_histogram
       // bucketing), exact-rational per-bucket contributions
@@ -454,17 +477,17 @@ object SparkEntry {
         o.where(col("y") > lit(DriftSplitYear)),
         expr(s"c div $DriftBucketCents"))
     }),
-    "q_entropy" -> ((s, dir) =>
+    "q_entropy" -> Q(Oracles.qEntropy)((s, dir) =>
       // language-mix diversity per source: exact-integer Shannon
       // entropy + evenness vs the uniform bound
       Sketches.entropy(t(s, dir, "documents"), col("source"), col("lang"))),
-    "events_user_entropy" -> ((s, dir) =>
+    "events_user_entropy" -> Q(Oracles.eventsUserEntropy)((s, dir) =>
       // behavioral diversity: per-user Shannon entropy of the
       // event-type mix — one-trick users score 0, the bot/browser
       // separation feature (same exact-integer entropy operator)
       Sketches.entropy(t(s, dir, "events"), col("user_id"),
         col("event_type"))),
-    "q_jsd_drift" -> ((s, dir) => {
+    "q_jsd_drift" -> Q(Oracles.qJsdDrift)((s, dir) => {
       // corpus-mix drift as LLM pipelines track it: Jensen–Shannon
       // divergence of the event-type distribution between the two
       // calendar halves of the stream — the categorical companion to
@@ -475,7 +498,7 @@ object SparkEntry {
         e.where(col("ts") >= ts(JsdSplitTs)),
         col("event_type"))
     }),
-    "q_ab_ttest" -> ((s, dir) => {
+    "q_ab_ttest" -> Q(Oracles.qAbTtest)((s, dir) => {
       // hash-split A/B readout: per-user total event value in cents,
       // arms by user parity (deterministic stand-in for an assignment),
       // Welch's unequal-variance t + Satterthwaite df from exact sums
@@ -484,7 +507,7 @@ object SparkEntry {
         .agg(sum(cents(col("value"))).as("m"))
       Experiment.welchT(m, col("user_id") % 2, col("m"))
     }),
-    "q_cuped" -> ((s, dir) => {
+    "q_cuped" -> Q(Oracles.qCuped)((s, dir) => {
       // CUPED variance reduction: pre-period per-user value (before the
       // split instant) is the covariate; the post-period value is the
       // experiment metric; theta fitted on the pooled units
@@ -495,47 +518,47 @@ object SparkEntry {
         coalesce(sum(when(col("ts") >= ts(JsdSplitTs), col("c"))), lit(0L)).as("y"))
       Experiment.cuped(u, col("user_id") % 2, col("x"), col("y"))
     }),
-    "q_odds_ratio" -> ((s, dir) =>
+    "q_odds_ratio" -> Q(Oracles.qOddsRatio)((s, dir) =>
       // per-priority 2×2 effect readout: parity-exposed × finalized
       // outcome, exact-ppm OR + Woolf 95% interval
       Experiment.oddsRatio(t(s, dir, "orders"), col("o_orderpriority"),
         col("o_custkey") % 2 === 0, col("o_orderstatus") === "F")),
-    "q_wilson_ci" -> ((s, dir) =>
+    "q_wilson_ci" -> Q(Oracles.qWilsonCi)((s, dir) =>
       // per-priority finalized-order rate with the Wilson 95% score
       // interval — the small-stratum-safe proportion gate; exact (n, k)
       // per group, bounds floor-scaled ppm from the shared IEEE fragment
       Experiment.wilsonCI(t(s, dir, "orders"), col("o_orderpriority"),
         col("o_orderstatus") === "F")),
-    "q_stratified_ate" -> ((s, dir) =>
+    "q_stratified_ate" -> Q(Oracles.qStratifiedAte)((s, dir) =>
       // post-stratification treatment effect: priority strata net out
       // the stratum mix; per-stratum contrasts + the standardized
       // __ate__ row, all exact truncating integers
       Experiment.stratifiedAte(t(s, dir, "orders"), col("o_orderpriority"),
         col("o_custkey") % 2 === 0, cents(col("o_totalprice")))),
-    "q_srm" -> ((s, dir) =>
+    "q_srm" -> Q(Oracles.qSrm)((s, dir) =>
       // sample-ratio-mismatch gate on the hash assignment: distinct
       // units per arm, chi-squared vs 50/50, 95% flag
       Experiment.srmGate(t(s, dir, "events").select(col("user_id")).distinct(),
         col("user_id") % 2 === 0)),
-    "q_did" -> ((s, dir) =>
+    "q_did" -> Q(Oracles.qDid)((s, dir) =>
       // difference-in-differences launch readout: user-parity arms,
       // pre/post at the JSD split instant, per-event cents metric —
       // the control arm nets out shared drift
       Experiment.did(t(s, dir, "events"), col("user_id") % 2 === 0,
         col("ts") >= ts(JsdSplitTs), cents(col("value")))),
-    "q_woe_iv" -> ((s, dir) =>
+    "q_woe_iv" -> Q(Oracles.qWoeIv)((s, dir) =>
       // weight-of-evidence / information-value feature screen: order
       // priority vs the finalized-status target — exact int64 counts,
       // broadcast totals, ln() over exact-product doubles
       Quality.woeIv(t(s, dir, "orders"), col("o_orderpriority"),
         col("o_orderstatus") === "F")),
-    "q_calibration" -> ((s, dir) =>
+    "q_calibration" -> Q(Oracles.qCalibration)((s, dir) =>
       // reliability table: ppm score (10×discount pseudo-model) vs the
       // return outcome in equal-width bins; bin −1 = N/positives/ECE
       Quality.calibration(t(s, dir, "lineitem"),
         floor(col("l_discount") * lit(10000000.0)).cast("long"),
         col("l_returnflag") === "R", CalibBins)),
-    "q_random_walks" -> ((s, dir) => {
+    "q_random_walks" -> Q(Oracles.qRandomWalks)((s, dir) => {
       // DeepWalk-style training corpus: hash-deterministic 4-step walks
       // over the undirected trading graph from every 100th supplier —
       // replayable on any engine (the oracle is WITH RECURSIVE)
@@ -551,7 +574,7 @@ object SparkEntry {
         .select(col("s_suppkey").as("node"))
       operators.Walks.randomWalks(edges, seeds, WalkSteps, WalkSalt)
     }),
-    "q_modularity" -> ((s, dir) => {
+    "q_modularity" -> Q(Oracles.qModularity)((s, dir) => {
       // nation-homophily audit of the supplier–customer trading graph:
       // does linkage concentrate inside nations beyond what a
       // degree-preserving rewiring predicts? Σ(within−expected)/1e6 = Q
@@ -568,7 +591,7 @@ object SparkEntry {
             col("c_nationkey").as("label")))
       operators.Modularity.partitionModularity(edges, labels)
     }),
-    "q_ewma" -> ((s, dir) => {
+    "q_ewma" -> Q(Oracles.qEwma)((s, dir) => {
       // integer exponential smoothing (α = 1/4): the recurrence
       // s' = (3s + x) div 4 folds over the SORTED monthly series — a
       // bounded post-aggregate array, so the sequential dependency never
@@ -588,7 +611,7 @@ object SparkEntry {
             "if(acc < 0, r.total_cents, (acc * 3 + r.total_cents) div 4))")
             .as("ewma_cents"))
     }),
-    "q_rolling_median" -> ((s, dir) => {
+    "q_rolling_median" -> Q(Oracles.qRollingMedian)((s, dir) => {
       // exact rolling median over a bounded 7-row frame: sort the frame's
       // collected values, take the type-1 middle — robust trend line the
       // moving AVERAGE family can't give; runs on the post-aggregate
@@ -603,7 +626,7 @@ object SparkEntry {
           element_at(array_sort(col("__w")),
             expr("(size(__w) + 1) div 2").cast("int")).as("med7"))
     }),
-    "events_new_users" -> ((s, dir) => {
+    "events_new_users" -> Q(Oracles.eventsNewUsers)((s, dir) => {
       // audience split: per day, active users partitioned into new
       // (first-ever activity) vs returning — first-seen table keyed on
       // the user, the same key the daily-activity join needs
@@ -617,7 +640,7 @@ object SparkEntry {
           sum(when(col("day") === col("first_day"), 1L).otherwise(0L)).as("n_new"))
         .withColumn("n_returning", col("n_active") - col("n_new"))
     }),
-    "q_moving_avg" -> ((s, dir) => {
+    "q_moving_avg" -> Q(Oracles.qMovingAvg)((s, dir) => {
       val yearly = t(s, dir, "orders")
         .groupBy(year(col("o_orderdate")).cast("long").as("yearkey"))
         .agg(sum(cents(col("o_totalprice"))).as("total_cents"))
@@ -627,7 +650,7 @@ object SparkEntry {
         round(avg(col("total_cents")).over(
           Window.partitionBy(lit(0)).orderBy(col("yearkey")).rowsBetween(-2, 0)), 4))
     }),
-    "q_ntile" -> ((s, dir) =>
+    "q_ntile" -> Q(Oracles.qNtile)((s, dir) =>
       t(s, dir, "orders")
         .withColumn("quartile",
           ntile(4).over(Window.partitionBy(year(col("o_orderdate")))
@@ -636,11 +659,11 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"),
           min(cents(col("o_totalprice"))).as("lo_cents"),
           max(cents(col("o_totalprice"))).as("hi_cents"))),
-    "q_rollup" -> ((s, dir) =>
+    "q_rollup" -> Q(Oracles.qRollup)((s, dir) =>
       t(s, dir, "orders")
         .rollup(year(col("o_orderdate")).cast("long").as("yearkey"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), sum(cents(col("o_totalprice"))).as("total_cents"))),
-    "q_grouping_sets" -> ((s, dir) =>
+    "q_grouping_sets" -> Q(Oracles.qGroupingSets)((s, dir) =>
       // arbitrary grouping-set shapes (beyond rollup's prefix chain):
       // Spark expands the sets in ONE pass over the input — each set
       // contributes its own partial aggregate, no per-set rescan
@@ -651,15 +674,15 @@ object SparkEntry {
           Seq(Seq(col("yearkey"), col("o_orderpriority")), Seq(col("o_orderpriority")), Seq.empty),
           col("yearkey"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), sum(col("pc")).as("total_cents"))),
-    "q_cube" -> ((s, dir) =>
+    "q_cube" -> Q(Oracles.qCube)((s, dir) =>
       t(s, dir, "orders")
         .cube(year(col("o_orderdate")).cast("long").as("yearkey"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), sum(cents(col("o_totalprice"))).as("total_cents"))),
-    "q_median" -> ((s, dir) =>
+    "q_median" -> Q(Oracles.qMedian)((s, dir) =>
       Marts.exactMedian(t(s, dir, "orders"),
         year(col("o_orderdate")).cast("long"), "yearkey",
         col("o_totalprice"), col("o_orderkey"))),
-    "q_weighted_median" -> ((s, dir) =>
+    "q_weighted_median" -> Q(Oracles.qWeightedMedian)((s, dir) =>
       // quantity-weighted median line price per ship year — per-group
       // cumulatives out of the global two-pass cumsum, no per-group
       // single-partition sort
@@ -667,33 +690,33 @@ object SparkEntry {
         year(col("l_shipdate")).cast("long"), "yearkey",
         cents(col("l_extendedprice")), col("l_quantity"),
         col("l_orderkey") * 8 + col("l_linenumber"))),
-    "q_mode" -> ((s, dir) =>
+    "q_mode" -> Q(Oracles.qMode)((s, dir) =>
       // most frequent priority per year, smallest-value tie-break
       Marts.exactMode(t(s, dir, "orders"),
         year(col("o_orderdate")).cast("long"), "yearkey",
         col("o_orderpriority"))),
-    "q_string_agg" -> ((s, dir) =>
+    "q_string_agg" -> Q(Oracles.qStringAgg)((s, dir) =>
       // deterministic listagg: sorted distinct statuses per year —
       // bounded by the value domain, never by row count
       t(s, dir, "orders")
         .groupBy(year(col("o_orderdate")).cast("long").as("yearkey"))
         .agg(concat_ws(",", sort_array(collect_set(col("o_orderstatus"))))
           .as("statuses"))),
-    "q_higher_moments" -> ((s, dir) =>
+    "q_higher_moments" -> Q(Oracles.qHigherMoments)((s, dir) =>
       // skew/kurtosis about the integer floor mean: exact decimal
       // centered power sums, one fixed-order IEEE formula (no pow)
       Sketches.higherMoments(t(s, dir, "orders"), col("o_orderpriority"),
         "grp", cents(col("o_totalprice")))),
-    "events_concurrency" -> ((s, dir) =>
+    "events_concurrency" -> Q(Oracles.eventsConcurrency)((s, dir) =>
       // sweep-line peak occupancy per day over sessionized intervals,
       // running-summed by the two-pass globalCumsum
       EventOps.maxConcurrency(t(s, dir, "events"), "user_id", "ts",
         SessionGapMs)),
-    "q_quartiles" -> ((s, dir) =>
+    "q_quartiles" -> Q(Oracles.qQuartiles)((s, dir) =>
       Marts.exactQuartiles(t(s, dir, "orders"),
         year(col("o_orderdate")).cast("long"), "yearkey",
         col("o_totalprice"), col("o_orderkey"))),
-    "q_gap_fill" -> ((s, dir) => {
+    "q_gap_fill" -> Q(Oracles.qGapFill)((s, dir) => {
       // dense monthly series per customer nation: months with no orders
       // must exist as zero rows (trend math breaks on a sparse axis),
       // and the running gauge carries the last observed value forward.
@@ -708,14 +731,14 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_orders"), sum(col("pc")).as("sum_cents"))
       Marts.gapFillLocf(obs, "grp", "mk", Seq("n_orders"), Seq("sum_cents"))
     }),
-    "q_outliers" -> ((s, dir) =>
+    "q_outliers" -> Q(Oracles.qOutliers)((s, dir) =>
       // robust per-priority price anomalies: |x-med| > k·MAD, exact
       // integer medians — the stats gate that doesn't mask itself
       Quality.robustOutliers(t(s, dir, "orders"), col("o_orderpriority"), "grp",
           cents(col("o_totalprice")), col("o_orderkey"), OutlierK)
         .select(col("grp"), col("row_key").as("o_orderkey"),
           col("value").as("price_cents"), col("med"), col("mad"))),
-    "q_kmv_union" -> ((s, dir) =>
+    "q_kmv_union" -> Q(Oracles.qKmvUnion)((s, dir) =>
       // sketch algebra: per-year KMV sketches merge into the all-years
       // union distinct estimate WITHOUT rescanning orders — the merged
       // sketch is exactly the union's sketch
@@ -723,7 +746,7 @@ object SparkEntry {
         operators.Sketches.kmvSketch(t(s, dir, "orders"),
           year(col("o_orderdate")).cast("long"), "yearkey",
           col("o_custkey"), KmvK, KmvSalt), "hs", KmvK)),
-    "q_share" -> ((s, dir) => {
+    "q_share" -> Q(Oracles.qShare)((s, dir) => {
       // ratio-to-report: each priority's share of total revenue in exact
       // ppm — group sums + a broadcast 1-row total, no window
       val g = t(s, dir, "orders").groupBy(col("o_orderpriority"))
@@ -734,7 +757,7 @@ object SparkEntry {
           // keeps the ppm product exact at any decade
           expr("CAST(rev_cents AS DECIMAL(38,0)) * 1000000 div __t").as("share_ppm"))
     }),
-    "q_nested_explode" -> ((s, dir) => {
+    "q_nested_explode" -> Q(Oracles.qNestedExplode)((s, dir) => {
       // document-model roundtrip: orders nest into a per-customer sorted
       // ARRAY<STRUCT>, then a HOF fold (aggregate) and element access
       // compute the outputs from the NESTED form — proving the nested
@@ -751,7 +774,7 @@ object SparkEntry {
         aggregate(col("orders"), lit(0L), (acc, o) => acc + o.getField("p"))
           .as("total_cents"))
     }),
-    "q_skyline" -> ((s, dir) =>
+    "q_skyline" -> Q(Oracles.qSkyline)((s, dir) =>
       // Pareto frontier over parts (minimize price, maximize size) via
       // the range-partition + offset dominance sweep — no global window
       operators.Skyline.skyline2D(
@@ -759,13 +782,13 @@ object SparkEntry {
           cents(col("p_retailprice")).as("price_cents"),
           col("p_size").cast("long").as("psize")),
         "price_cents", "psize")),
-    "q_bootstrap" -> ((s, dir) =>
+    "q_bootstrap" -> Q(Oracles.qBootstrap)((s, dir) =>
       // Poisson bootstrap of the mean order price: B deterministic
       // hash-Poisson reweightings, each replicate mean exact int64 —
       // the sampling distribution without materializing a resample
       operators.Sketches.poissonBootstrap(t(s, dir, "orders"),
         col("o_orderkey"), cents(col("o_totalprice")), BootstrapB, BootstrapSalt)),
-    "q_bootstrap_ci" -> ((s, dir) => {
+    "q_bootstrap_ci" -> Q(Oracles.qBootstrapCi)((s, dir) => {
       // the bootstrap read-out: type-1 [p05, p95] band over the B
       // replicate means (a B-row table — the heavy lifting happened in
       // the reweighting pass)
@@ -782,25 +805,25 @@ object SparkEntry {
             expr(s"(${WinsorHiPm}L * $BootstrapB + 999) div 1000"), lit(1L)),
             col("mean_cents"))).as("hi_cents"))
     }),
-    "q_mannwhitney" -> ((s, dir) =>
+    "q_mannwhitney" -> Q(Oracles.qMannWhitney)((s, dir) =>
       // exact AUC of price as a separator of open vs settled orders:
       // doubled midranks keep the tie handling in pure int64
       operators.Sketches.mannWhitney(t(s, dir, "orders"), col("o_orderstatus"),
         "O", cents(col("o_totalprice")))),
-    "q_ks_test" -> ((s, dir) =>
+    "q_ks_test" -> Q(Oracles.qKsTest)((s, dir) =>
       // distribution drift gate: exact two-sample KS between open ('O')
       // and settled orders over price cents — integer CDF gaps via the
       // distributed two-phase cumsum
       operators.Sketches.ksTest(t(s, dir, "orders"), col("o_orderstatus"),
         "O", cents(col("o_totalprice")))),
-    "q_gini" -> ((s, dir) =>
+    "q_gini" -> Q(Oracles.qGini)((s, dir) =>
       // spend-concentration KPI: exact Gini over per-customer totals,
       // ranks from the distributed range-partition GlobalRank
       operators.Sketches.gini(
         t(s, dir, "orders").groupBy(col("o_custkey"))
           .agg(sum(cents(col("o_totalprice"))).as("spend")),
         col("o_custkey"), col("spend"))),
-    "q_winsorize" -> ((s, dir) =>
+    "q_winsorize" -> Q(Oracles.qWinsorize)((s, dir) =>
       // tail clipping at exact per-year [p05, p95]: permille ranks keep
       // both engines on pure integers; bounds broadcast back to rows
       Marts.winsorize(t(s, dir, "orders"), year(col("o_orderdate")).cast("long"),
@@ -808,14 +831,14 @@ object SparkEntry {
           WinsorLoPm, WinsorHiPm)
         .select(col("yearkey"), col("o_orderkey"),
           col("value").as("price_cents"), col("clipped").as("clipped_cents"))),
-    "etl_upsert" -> ((s, dir) => {
+    "etl_upsert" -> Q(Oracles.etlUpsert)((s, dir) => {
       val orders = t(s, dir, "orders")
       val updates = orders.filter(col("o_orderkey") % 7 === 0)
         .withColumn("o_totalprice", col("o_totalprice") + 1000.0)
       Staging.upsert(orders, updates, Seq("o_orderkey"))
         .select(col("o_orderkey"), cents(col("o_totalprice")).as("price_cents"))
     }),
-    "etl_ivm_join" -> ((s, dir) => {
+    "etl_ivm_join" -> Q(Oracles.etlIvmJoin)((s, dir) => {
       // incremental refresh of the orders⋈customer view: new orders
       // arrive past the cut AND a slice of the dimension arrives late;
       // only the three delta terms execute — V_old streams into the
@@ -836,7 +859,7 @@ object SparkEntry {
         .select(col("custkey"), col("o_orderkey"), col("price_cents"),
           col("segment"))
     }),
-    "etl_merge_full" -> ((s, dir) => {
+    "etl_merge_full" -> Q(Oracles.etlMergeFull)((s, dir) => {
       // 4-clause MERGE over a trimmed orders snapshot: source rows for
       // keys %7=0 (updates in place) plus new keys (+1e9 for %7=3);
       // matched O-status rows update, matched %21=0 rows delete, all
@@ -856,7 +879,7 @@ object SparkEntry {
         insertWhen = Some(lit(true)),
         notBySourceDelete = Some(col("o_orderkey") % 1000 === 17))
     }),
-    "etl_forget" -> ((s, dir) => {
+    "etl_forget" -> Q(Oracles.etlForget)((s, dir) => {
       // GDPR erasure cascade: forget customers (key % 97 = 0), purge
       // them, their orders, and their orders' lineitems; emit the
       // deletion certificate (per-table before/after/removed counts).
@@ -877,7 +900,7 @@ object SparkEntry {
             (col("n_before") - col("n_after")).as("n_removed"))
       }.reduce(_ unionByName _)
     }),
-    "etl_cdc_apply" -> ((s, dir) => {
+    "etl_cdc_apply" -> Q(Oracles.etlCdcApply)((s, dir) => {
       // CDC log fold: updates for keys %7=0 (seq 1), deletes for keys
       // %11=0 (seq 2) — keys hit by both get the delete as the LATER
       // entry, exercising latest-op-wins
@@ -890,7 +913,7 @@ object SparkEntry {
       Staging.cdcApply(orders, ups.unionByName(dels), Seq("o_orderkey"), "op", Seq("seq"))
         .select(col("o_orderkey"), cents(col("o_totalprice")).as("price_cents"))
     }),
-    "etl_snapshot_diff" -> ((s, dir) => {
+    "etl_snapshot_diff" -> Q(Oracles.etlSnapshotDiff)((s, dir) => {
       // derive "today's dump" from orders (price bump for %7, drop %11,
       // insert %13 under shifted keys), then emit the minimal CDC log —
       // the no-CDC-upstream ingestion path, cdcApply's inverse
@@ -905,7 +928,7 @@ object SparkEntry {
         .select(col("o_orderkey"), col("op"),
           cents(col("o_totalprice")).as("price_cents"))
     }),
-    "etl_scd2" -> ((s, dir) => {
+    "etl_scd2" -> Q(Oracles.etlScd2)((s, dir) => {
       // history dimension from a change log: each order is a change event
       // for its customer, tracked attribute = order priority; output one
       // row per version with its half-open validity window
@@ -918,7 +941,8 @@ object SparkEntry {
           col("effective_to").cast("string").as("effective_to"),
           col("is_current"), col("o_orderpriority"))
     }),
-    "etl_scd2_merge" -> ((s, dir) => {
+    // the merge's oracle IS the full rebuild — incremental must equal it
+    "etl_scd2_merge" -> Q(Oracles.etlScd2)((s, dir) => {
       // incremental ≡ full: build history from pre-1997 orders, merge the
       // 1997+ batch in, and let the DUCKDB FULL-REBUILD oracle hash-check
       // that the incremental path reproduces it exactly
@@ -934,7 +958,7 @@ object SparkEntry {
           col("effective_to").cast("string").as("effective_to"),
           col("is_current"), col("o_orderpriority"))
     }),
-    "etl_scd2_lookup" -> ((s, dir) => {
+    "etl_scd2_lookup" -> Q(Oracles.etlScd2Lookup)((s, dir) => {
       // point-in-time lookup: each order probes the SCD-2 version valid
       // 30 days after its date — scd2 composed with the KEYED bucketed
       // range join (equi on the business key + bucket id, exact [from,to)
@@ -957,18 +981,18 @@ object SparkEntry {
         .select(col("o_orderkey"), col("pd").cast("string").as("probe_date"),
           col("d_priority"), col("version_d").cast("string").as("version_from"))
     }),
-    "q_distinct_count" -> ((s, dir) =>
+    "q_distinct_count" -> Q(Oracles.qDistinctCount)((s, dir) =>
       t(s, dir, "orders")
         .groupBy(year(col("o_orderdate")).cast("long").as("yearkey"))
         .agg(countDistinct(col("o_custkey")).as("n_cust"), count(lit(1)).as("n_orders"))),
-    "q_kmv_distinct" -> ((s, dir) =>
+    "q_kmv_distinct" -> Q(Oracles.qKmvDistinct)((s, dir) =>
       // PORTABLE approx-distinct: k-minimum-values over md5 hashes —
       // unlike the HLL twin (q_approx_distinct, rows-only by design)
       // the DuckDB oracle replays this estimate bit-for-bit
       Sketches.kmvDistinct(t(s, dir, "orders"),
         year(col("o_orderdate")).cast("long"), "yearkey", col("o_custkey"),
         KmvK, KmvSalt)),
-    "q_kll_quantiles" -> ((s, dir) =>
+    "q_kll_quantiles" -> Q(Oracles.qKllQuantiles)((s, dir) =>
       // mergeable bounded-state quantile sketch: per-year price
       // percentiles from k sampled rows — no per-group sort-shuffle
       // (q_quartiles) and no a-priori value range (q_quantile_est);
@@ -978,7 +1002,7 @@ object SparkEntry {
           year(col("o_orderdate")).cast("long"), "yearkey",
           col("o_orderkey"), cents(col("o_totalprice")), KllK, KllSalt),
         "qs", KllPs)),
-    "q_kll_union" -> ((s, dir) =>
+    "q_kll_union" -> Q(Oracles.qKllUnion)((s, dir) =>
       // sketch algebra: per-year quantile sketches merge into the
       // all-years percentile estimate WITHOUT rescanning orders — the
       // merged bottom-k state is exactly the union's state
@@ -987,14 +1011,14 @@ object SparkEntry {
           year(col("o_orderdate")).cast("long"), "yearkey",
           col("o_orderkey"), cents(col("o_totalprice")), KllK, KllSalt),
         "qs", KllK, KllPs)),
-    "q_global_rank" -> ((s, dir) =>
+    "q_global_rank" -> Q(Oracles.qGlobalRank)((s, dir) =>
       // global sequential rank over a total order WITHOUT the
       // single-partition window trap (range partition + offsets)
       operators.GlobalRank.globalRank(
           t(s, dir, "orders").select(col("o_orderkey"), cents(col("o_totalprice")).as("price_cents")),
           Seq(col("price_cents").desc, col("o_orderkey").asc))
         .select(col("o_orderkey"), col("price_cents"), col("grank"))),
-    "q_running_total" -> ((s, dir) => {
+    "q_running_total" -> Q(Oracles.qRunningTotal)((s, dir) => {
       val yearly = t(s, dir, "orders")
         .groupBy(year(col("o_orderdate")).cast("long").as("yearkey"))
         .agg(sum(cents(col("o_totalprice"))).as("total_cents"))
@@ -1006,7 +1030,7 @@ object SparkEntry {
         sum(col("total_cents")).over(Window.partitionBy(lit(0)).orderBy(col("yearkey"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     }),
-    "q_approx_distinct" -> ((s, dir) =>
+    "q_approx_distinct" -> Q(Oracles.qApproxDistinct)((s, dir) =>
       // HLL sketch, CERTIFIED against the exact count in one pass: the
       // estimate itself isn't portable (HLL internals), so the output
       // carries the exact distinct plus a within-band flag — the DuckDB
@@ -1021,7 +1045,7 @@ object SparkEntry {
           (abs(col("__est") - col("n_cust_exact"))
             <= greatest(lit(3L), (col("n_cust_exact") * 15L) / lit(100L)))
             .as("est_within_band"))),
-    "mart_top_salted" -> ((s, dir) =>
+    "mart_top_salted" -> Q(Oracles.martTopPerGroup)((s, dir) =>
       Marts.topNPerGroupSalted(
           t(s, dir, "orders").join(broadcast(t(s, dir, "customer")),
             col("o_custkey") === col("c_custkey")),
@@ -1031,7 +1055,7 @@ object SparkEntry {
           cents(col("o_totalprice")).as("price_cents"), col("rk"))),
 
     // ---- §2.3 dedup ----
-    "dedup_source_stats" -> ((s, dir) =>
+    "dedup_source_stats" -> Q(Oracles.dedupSourceStats)((s, dir) =>
       // per-source duplication census: corpus-wide exact-dup rate by
       // origin — the first column of every curation dashboard (which
       // feeds are copy-paste farms); one (source)-keyed aggregate over
@@ -1042,29 +1066,29 @@ object SparkEntry {
           countDistinct(md5(col("text"))).as("n_unique"))
         .select(col("source"), col("n_docs"), col("n_unique"),
           expr("1000000L * (n_docs - n_unique) div n_docs").as("dup_ppm"))),
-    "dedup_overlap_matrix" -> ((s, dir) =>
+    "dedup_overlap_matrix" -> Q(Oracles.dedupOverlapMatrix)((s, dir) =>
       // source×source content-overlap matrix: Jaccard + both
       // containments per source pair over distinct content digests —
       // the provenance audit behind corpus mix weights
       Dedup.sourceOverlapMatrix(t(s, dir, "documents"), "source", "text")),
-    "dedup_exact" -> ((s, dir) =>
+    "dedup_exact" -> Q(Oracles.dedupExact)((s, dir) =>
       Dedup.exact(t(s, dir, "documents"), "doc_id", "text")),
-    "dedup_span_audit" -> ((s, dir) =>
+    "dedup_span_audit" -> Q(Oracles.dedupSpanAudit)((s, dir) =>
       // substring-level duplication audit: per-doc coverage by n-token
       // spans shared across >= 2 distinct docs (Lee et al. signal)
       Dedup.dupSpans(t(s, dir, "documents"), "doc_id", "text", DupSpanN)),
-    "dedup_minhash_lsh" -> ((s, dir) =>
+    "dedup_minhash_lsh" -> Q(Oracles.dedupMinhashLsh)((s, dir) =>
       Dedup.minhashCandidates(t(s, dir, "documents"), "doc_id", "text", MinhashK, MinhashBands)),
-    "dedup_minhash_n3" -> ((s, dir) =>
+    "dedup_minhash_n3" -> Q(Oracles.dedupMinhashN3)((s, dir) =>
       // same LSH pipeline over trigram shingles — the shingling-n dial
       Dedup.minhashCandidates(t(s, dir, "documents"), "doc_id", "text", MinhashK,
         MinhashBands, shingleN = 3)),
-    "dedup_ngram_jaccard" -> ((s, dir) =>
+    "dedup_ngram_jaccard" -> Q(Oracles.dedupNgramJaccard)((s, dir) =>
       Dedup.ngramJaccard(t(s, dir, "documents"), "doc_id", "text", JaccardMin, MinhashK, MinhashBands)),
-    "dedup_cluster" -> ((s, dir) =>
+    "dedup_cluster" -> Q(Oracles.dedupCluster)((s, dir) =>
       Dedup.clusters(
         Dedup.ngramJaccard(t(s, dir, "documents"), "doc_id", "text", JaccardMin, MinhashK, MinhashBands))),
-    "text_curation_e2e" -> ((s, dir) => {
+    "text_curation_e2e" -> Q(Oracles.textCurationE2e)((s, dir) => {
       // the whole curation pipeline as ONE declarative plan, with a
       // per-stage certificate: raw → exact dedup (keep min id) →
       // near-dup removal (keep doc_a side of verified pairs) → quality
@@ -1088,7 +1112,7 @@ object SparkEntry {
         .select(col("split").as("stage"), col("n"))
       (fixed :+ splits).reduce(_ unionByName _)
     }),
-    "dedup_consensus" -> ((s, dir) => {
+    "dedup_consensus" -> Q(Oracles.dedupConsensus)((s, dir) => {
       // multi-signal dedup, the production shape: shingle-overlap pairs
       // (MinHash→Jaccard-verified) ∪ structural pairs (SimHash hamming)
       // feed ONE clustering — each detector catches near-dups the other
@@ -1100,22 +1124,22 @@ object SparkEntry {
         .select(col("doc_a"), col("doc_b"))
       Dedup.clusters(jp.unionByName(sp).distinct())
     }),
-    "text_pipeline" -> ((s, dir) =>
+    "text_pipeline" -> Q(Oracles.textPipeline)((s, dir) =>
       Dedup.cleanCorpus(t(s, dir, "documents"), "doc_id", "text", JaccardMin, CleanMinQuality)),
-    "dedup_incremental" -> ((s, dir) => {
+    "dedup_incremental" -> Q(Oracles.dedupIncremental)((s, dir) => {
       val docs = t(s, dir, "documents")
       Dedup.incrementalCandidates(docs.filter(col("doc_id") % 5 === 0),
         Dedup.bandTable(docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text",
           MinhashK, MinhashBands),
         "doc_id", "text", MinhashK, MinhashBands)
     }),
-    "dedup_decontaminate" -> ((s, dir) => {
+    "dedup_decontaminate" -> Q(Oracles.dedupDecontaminate)((s, dir) => {
       val docs = t(s, dir, "documents")
       Dedup.decontaminate(docs, docs.filter(col("doc_id") % 50 === 0),
           "doc_id", "text", MinhashK, MinhashBands)
         .select(col("doc_id"), col("n_chars"))
     }),
-    "dedup_containment" -> ((s, dir) => {
+    "dedup_containment" -> Q(Oracles.dedupContainment)((s, dir) => {
       // asymmetric containment |A∩B|/|A|: catches a benchmark item quoted
       // inside a larger doc, where symmetric jaccard dilutes to ~0
       val docs = t(s, dir, "documents")
@@ -1123,7 +1147,7 @@ object SparkEntry {
         docs.filter(col("doc_id") % 50 === 0), "doc_id", "text",
         ContMinNum, ContMinDen)
     }),
-    "text_pii_scrub" -> ((s, dir) => {
+    "text_pii_scrub" -> Q(Oracles.textPiiScrub)((s, dir) => {
       // inject synthetic PII into a tenth of the docs so the scrub has
       // real matches to prove itself on
       val doc = t(s, dir, "documents").withColumn("t2",
@@ -1133,12 +1157,12 @@ object SparkEntry {
       doc.select(col("doc_id"), T.piiScrub(col("t2")).as("clean_text"),
         T.piiCount(col("t2")).as("n_pii"))
     }),
-    "dedup_simhash" -> ((s, dir) =>
+    "dedup_simhash" -> Q(Oracles.dedupSimhash)((s, dir) =>
       Dedup.simhashPairs(t(s, dir, "documents"), "doc_id", "text", SimhashMaxDist)),
-    "dedup_embedding" -> ((s, dir) =>
+    "dedup_embedding" -> Q(Oracles.dedupEmbedding)((s, dir) =>
       Dedup.embeddingNearDup(embT(s, dir), "vec_id", "embedding", EmbMinCos,
         EmbPlanes, EmbBands, EmbDims)),
-    "dedup_lsh_recall" -> ((s, dir) => {
+    "dedup_lsh_recall" -> Q(Oracles.dedupLshRecall)((s, dir) => {
       // MinHash-LSH recall against the EXACT PPJoin ground truth at the
       // same Jaccard threshold — the one number that justifies shipping
       // the probabilistic path over the lossless one. The truth half is
@@ -1179,12 +1203,12 @@ object SparkEntry {
           when(col("n_true") === 0L, lit(1000000L))
             .otherwise(expr("n_hit * 1000000 div n_true")).as("recall_ppm"))
     }),
-    "dedup_threshold_sweep" -> ((s, dir) =>
+    "dedup_threshold_sweep" -> Q(Oracles.dedupThresholdSweep)((s, dir) =>
       // one-pass cosine-band census of the LSH candidates: the evidence
       // for choosing EmbMinCos instead of guessing it
       Dedup.nearDupSweep(embT(s, dir), "vec_id", "embedding",
         EmbPlanes, EmbBands, EmbDims)),
-    "src_csv_badrecords" -> ((s, dir) => {
+    "src_csv_badrecords" -> Q(Oracles.srcCsvBadrecords)((s, dir) => {
       // malformed-row quarantine at the source: PERMISSIVE CSV read
       // with a corrupt-record column; corruption is injected
       // deterministically (custkey ≡0 mod 97 gets a non-numeric field)
@@ -1204,7 +1228,7 @@ object SparkEntry {
           sum(when(col("_corrupt").isNotNull, 1L).otherwise(0L)).as("n_bad"),
           coalesce(sum(col("natkey_str").cast("long")), lit(0L)).as("natkey_sum"))
     }),
-    "dedup_semantic" -> ((s, dir) => {
+    "dedup_semantic" -> Q(Oracles.dedupSemantic)((s, dir) => {
       // SemDeDup end-to-end: train the cell quantizer with the k-means
       // loop, then within-cell near-dup prune keeping each group's most
       // prototypical member — the full semantic-dedup composition
@@ -1215,13 +1239,13 @@ object SparkEntry {
     }),
 
     // ---- §2.4 similarity search ----
-    "ann_brute_topk" -> ((s, dir) => {
+    "ann_brute_topk" -> Q(Oracles.annBruteTopK)((s, dir) => {
       val emb = embT(s, dir)
       Similarity.bruteForceTopK(annQueries(emb), emb,
           "vec_id", "embedding", AnnK)
         .select(col("query_id"), col("neighbor_id"), col("cos"), col("rnk"))
     }),
-    "ann_mrl_topk" -> ((s, dir) => {
+    "ann_mrl_topk" -> Q(Oracles.annMrlTopK)((s, dir) => {
       // Matryoshka two-stage: rank every corpus row in the 16-dim
       // prefix, exact-rerank a 30-candidate pool at full width
       val emb = embT(s, dir)
@@ -1229,19 +1253,19 @@ object SparkEntry {
           "vec_id", "embedding", MrlDims, MrlPool, AnnK)
         .select(col("query_id"), col("neighbor_id"), col("cos"), col("rnk"))
     }),
-    "ann_lsh_topk" -> ((s, dir) => {
+    "ann_lsh_topk" -> Q(Oracles.annLshTopK)((s, dir) => {
       val emb = embT(s, dir)
       Similarity.lshTopK(annQueries(emb), emb,
           "vec_id", "embedding", AnnK, EmbPlanes, EmbBands, EmbDims)
         .select(col("query_id"), col("neighbor_id"), col("cos"), col("rnk"))
     }),
-    "ann_ivf_topk" -> ((s, dir) => {
+    "ann_ivf_topk" -> Q(Oracles.annIvfTopK)((s, dir) => {
       val emb = embT(s, dir)
       Similarity.ivfTopK(annQueries(emb), emb,
           "vec_id", "embedding", AnnK, IvfCells, EmbDims)
         .select(col("query_id"), col("neighbor_id"), col("cos"), col("rnk"))
     }),
-    "ann_ivf_nprobe" -> ((s, dir) => {
+    "ann_ivf_nprobe" -> Q(Oracles.annIvfNprobe)((s, dir) => {
       // the recall knob: same inverted-file layout, each query probes its
       // IvfNprobe nearest cells instead of one
       val emb = embT(s, dir)
@@ -1249,7 +1273,7 @@ object SparkEntry {
           "vec_id", "embedding", AnnK, IvfCells, EmbDims, IvfNprobe)
         .select(col("query_id"), col("neighbor_id"), col("cos"), col("rnk"))
     }),
-    "ann_recall_eval" -> ((s, dir) => {
+    "ann_recall_eval" -> Q(Oracles.annRecallEval)((s, dir) => {
       // index-quality readout: recall@k of the nprobe-IVF index against
       // the exact brute-force ground truth, per query + micro-average —
       // the number that justifies (or rejects) the cheap index
@@ -1261,7 +1285,7 @@ object SparkEntry {
         Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", AnnK),
         AnnK)
     }),
-    "emb_kmeans_step" -> ((s, dir) => {
+    "emb_kmeans_step" -> Q(Oracles.embKmeansStep)((s, dir) => {
       // one distributed k-means update: map-side cell assignment against
       // literal centroids, then ONE hash aggregate with 64 per-dim sums —
       // deliberately no explode: a posexplode before the groupBy makes
@@ -1280,21 +1304,21 @@ object SparkEntry {
         .select(col("cell"), col("dim").cast("long").as("dim"),
           round(col("sv") / col("n"), 4).as("c"), col("n"))
     }),
-    "emb_rand_proj" -> ((s, dir) =>
+    "emb_rand_proj" -> Q(Oracles.embRandProj)((s, dir) =>
       // JL random projection 64→8: fixed md5-derived matrix, one
       // codegen'd dotConst per output coordinate, map-side only
       Similarity.randProject(embT(s, dir), "vec_id",
         "embedding", EmbDims, JlDims)),
-    "emb_sq8_codes" -> ((s, dir) =>
+    "emb_sq8_codes" -> Q(Oracles.embSq8Codes)((s, dir) =>
       // 4x scalar quantization: global per-dim min/max broadcast, pure
       // map-side coding
       Similarity.sq8Codes(embT(s, dir), "vec_id", "embedding",
         EmbDims)),
-    "emb_pq_codes" -> ((s, dir) =>
+    "emb_pq_codes" -> Q(Oracles.embPqCodes)((s, dir) =>
       // 32× embedding compression as a pure map-side projection
       Similarity.pqCodes(embT(s, dir), "vec_id", "embedding",
         PqSub, PqK, EmbDims)),
-    "ann_mrl_recall_eval" -> ((s, dir) => {
+    "ann_mrl_recall_eval" -> Q(Oracles.annMrlRecallEval)((s, dir) => {
       // how much recall the 16-dim Matryoshka prefix + 30-pool rerank
       // gives up vs exact search — the prefix-width tuning evidence
       val emb = embT(s, dir)
@@ -1303,7 +1327,7 @@ object SparkEntry {
         Similarity.mrlTopK(q, emb, "vec_id", "embedding", MrlDims, MrlPool, AnnK),
         Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", AnnK), AnnK)
     }),
-    "ann_lsh_recall_eval" -> ((s, dir) => {
+    "ann_lsh_recall_eval" -> Q(Oracles.annLshRecallEval)((s, dir) => {
       // the LSH bucket recall — completes the recall-eval family
       // (IVF / PQ / MRL / LSH all scored against one ground truth)
       val emb = embT(s, dir)
@@ -1313,7 +1337,7 @@ object SparkEntry {
           EmbPlanes, EmbBands, EmbDims),
         Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", AnnK), AnnK)
     }),
-    "emb_pq_recall_eval" -> ((s, dir) => {
+    "emb_pq_recall_eval" -> Q(Oracles.embPqRecallEval)((s, dir) => {
       // the question PQ compression must answer: how much recall does
       // 8×4-bit lossy coding give up vs exact search
       val emb = embT(s, dir)
@@ -1324,7 +1348,7 @@ object SparkEntry {
           PqSub, PqK, EmbDims),
         Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", AnnK), AnnK)
     }),
-    "emb_pq_adc" -> ((s, dir) => {
+    "emb_pq_adc" -> Q(Oracles.embPqAdc)((s, dir) => {
       // the search path PQ exists for: score the whole corpus from codes
       // only, no float vectors on the corpus side
       val emb = embT(s, dir)
@@ -1333,7 +1357,7 @@ object SparkEntry {
           "vec_id", "embedding", AnnK, PqSub, PqK, EmbDims)
         .select(col("query_id"), col("neighbor_id"), col("score"), col("rnk"))
     }),
-    "emb_ivf_pq_adc" -> ((s, dir) => {
+    "emb_ivf_pq_adc" -> Q(Oracles.embIvfPqAdc)((s, dir) => {
       // IVF+PQ: probe nprobe cells, ADC-score only their codes — float
       // vectors touched once at index build, never on the search path
       val emb = embT(s, dir)
@@ -1341,7 +1365,7 @@ object SparkEntry {
           "vec_id", "embedding", AnnK, IvfCells, EmbDims, IvfNprobe, PqSub, PqK)
         .select(col("query_id"), col("neighbor_id"), col("score"), col("rnk"))
     }),
-    "ann_ivf_trained" -> ((s, dir) => {
+    "ann_ivf_trained" -> Q(Oracles.annIvfTrained)((s, dir) => {
       // the production IVF shape: train the coarse quantizer with the
       // k-means loop, then search with the trained centroids + nprobe
       val emb = embT(s, dir)
@@ -1351,7 +1375,7 @@ object SparkEntry {
           "vec_id", "embedding", AnnK, cents2, IvfNprobe)
         .select(col("query_id"), col("neighbor_id"), col("cos"), col("rnk"))
     }),
-    "emb_pca_top" -> ((s, dir) => {
+    "emb_pca_top" -> Q(Oracles.embPcaTop)((s, dir) => {
       // top principal direction without the covariance matrix: one
       // aggregate pass per power-iteration round, round-4-snapped
       // trajectory (engine-replayable); dim −1 row carries λ̂
@@ -1361,12 +1385,12 @@ object SparkEntry {
       (v.zipWithIndex.map { case (x, i) => (i.toLong, x) } :+ ((-1L, lam)))
         .toDF("dim", "value")
     }),
-    "emb_label_silhouette" -> ((s, dir) =>
+    "emb_label_silhouette" -> Q(Oracles.embLabelSilhouette)((s, dir) =>
       // label-noise audit: silhouette anchored at the LABELED class
       // centroid — negative scores mark points another class claims
       Similarity.labelSilhouette(embT(s, dir), "label",
         "embedding", EmbDims)),
-    "emb_silhouette" -> ((s, dir) => {
+    "emb_silhouette" -> Q(Oracles.embSilhouette)((s, dir) => {
       // clustering-quality audit of the trained k-means fit: per-cell
       // centroid silhouette (O(n·k) medoid form) — the gate before an
       // IVF index built on these cells ships
@@ -1374,7 +1398,7 @@ object SparkEntry {
         "embedding", H.centroidWeights(IvfCells, EmbDims), EmbDims, KmeansIters)
       Similarity.silhouette(embT(s, dir), "embedding", cents, EmbDims)
     }),
-    "emb_kmeans_train" -> ((s, dir) => {
+    "emb_kmeans_train" -> Q(Oracles.embKmeansTrain)((s, dir) => {
       // full Lloyd's training loop: KmeansIters rounds of (assign against
       // literal centroids → one hash aggregate → round-4 means back to the
       // driver). Output is the final k×d centroid matrix in long form plus
@@ -1388,7 +1412,7 @@ object SparkEntry {
         cw.zipWithIndex.map { case (v, d) => (c.toLong, d.toLong, v, counts(c)) }
       }.toDF("cell", "dim", "c", "n")
     }),
-    "q_range_join" -> ((s, dir) => {
+    "q_range_join" -> Q(Oracles.qRangeJoin)((s, dir) => {
       val iv = t(s, dir, "part").filter(col("p_partkey") % 20 === 0)
         .select(col("p_partkey").as("band_id"),
           ((col("p_partkey") % 100) * lit(2000.0)).as("lo"))
@@ -1397,7 +1421,7 @@ object SparkEntry {
           iv, "lo", "hi", bucketWidth = 2000.0)
         .select(col("band_id"), col("o_orderkey"), cents(col("o_totalprice")).as("price_cents"))
     }),
-    "q_interval_coverage" -> ((s, dir) =>
+    "q_interval_coverage" -> Q(Oracles.qIntervalCoverage)((s, dir) =>
       // merged-interval coverage per supplier: fulfillment windows
       // [shipdate, shipdate + quantity days) overlap heavily, so the
       // sweep-line island merge is what makes "days committed" honest —
@@ -1408,7 +1432,7 @@ object SparkEntry {
           floor(col("l_quantity")).cast("long").as("q")),
         col("l_suppkey"), col("d0"), col("d0") + col("q"))),
 
-    "q_spatial_join" -> ((s, dir) =>
+    "q_spatial_join" -> Q(Oracles.qSpatialJoin)((s, dir) =>
       // proximity self-join on a synthetic integer grid derived from
       // part keys: all pairs within Chebyshev radius SpatialR via the
       // 3x3 grid-bucket equi-join (never a theta join). This is the
@@ -1435,7 +1459,7 @@ object SparkEntry {
         operators.RangeJoin.gridNeighborJoin(pts, "p_partkey", "x", "y", SpatialR)
       }),
 
-    "q_spatial_sampled" -> ((s, dir) => {
+    "q_spatial_sampled" -> Q(Oracles.qSpatialSampled)((s, dir) => {
       // the bounded twin the spatialAdvisory refusal recommends
       // (VERDICT r14 #4): probe-derived salted-hash rate thins ONE side
       // so pair output (= join work) is held at the budget however
@@ -1449,7 +1473,7 @@ object SparkEntry {
         SpatialR, SpatialSampledMaxPairs, SpatialSampleSalt)
     }),
 
-    "q_dbscan_core" -> ((s, dir) => {
+    "q_dbscan_core" -> Q(Oracles.qDbscanCore)((s, dir) => {
       // DBSCAN density split on the same synthetic grid: exact neighbor
       // counts within Chebyshev SpatialR, then core/border/noise labels.
       // Exact fixed-ε baseline — probe advisory as in q_spatial_join
@@ -1463,7 +1487,7 @@ object SparkEntry {
         SpatialR, DbscanMinPts)
     }),
 
-    "q_dbscan_cluster" -> ((s, dir) =>
+    "q_dbscan_cluster" -> Q(Oracles.qDbscanCluster)((s, dir) =>
       // full DBSCAN assignment: CC over the core-core in-radius graph
       // (checkpointed min-label loop, r10: connectivity-preserving
       // cell-star + per-cellpair-witness sparsification — the quadratic
@@ -1475,7 +1499,7 @@ object SparkEntry {
           (col("p_partkey") % 97).as("x"),
           (expr("p_partkey div 97") % 89).as("y")),
         "p_partkey", "x", "y", SpatialR, DbscanMinPts)),
-    "q_density_probe" -> ((s, dir) =>
+    "q_density_probe" -> Q(Oracles.qDensityProbe)((s, dir) =>
       // the ε knob, measured before any pair join exists: exact
       // integer degree bounds per candidate radius from cell counts
       // alone, the deterministic cap rate each would need, and the
@@ -1485,7 +1509,7 @@ object SparkEntry {
           (col("p_partkey") % 97).as("x"),
           (expr("p_partkey div 97") % 89).as("y")),
         "p_partkey", "x", "y", DbscanProbeLadder, DbscanTargetNb)),
-    "q_dbscan_capped" -> ((s, dir) =>
+    "q_dbscan_capped" -> Q(Oracles.qDbscanCapped)((s, dir) =>
       // bounded-work DBSCAN: probe-driven salted-hash cap holds the
       // pair join at |pts|·target however dense the space grows — the
       // ship path for densifying corpora, with fixed-ε q_dbscan_core
@@ -1496,7 +1520,7 @@ object SparkEntry {
           (expr("p_partkey div 97") % 89).as("y")),
         "p_partkey", "x", "y", SpatialR, DbscanMinPts,
         DbscanTargetNb, DbscanSampleSalt)),
-    "q_salted_join" -> ((s, dir) => {
+    "q_salted_join" -> Q(Oracles.qSaltedJoin)((s, dir) => {
       // 10 hot keys over all of lineitem — the manual salt-replicate
       // join spreads each over SaltFactor partitions; the aggregate
       // proves result ≡ plain join
@@ -1509,7 +1533,7 @@ object SparkEntry {
         .groupBy(col("grp"), col("label"))
         .agg(count(lit(1)).as("n"), sum(col("l_quantity").cast("long")).as("qty"))
     }),
-    "q_fuzzy_join" -> ((s, dir) => {
+    "q_fuzzy_join" -> Q(Oracles.qFuzzyJoin)((s, dir) => {
       // record linkage: dirty probes (catalog names with the last char
       // dropped) resolved back to the catalog via block + length
       // prefilter + levenshtein + struct-min best-match
@@ -1518,7 +1542,7 @@ object SparkEntry {
         expr("substring(p_name, 1, length(p_name) - 1)").as("probe"))
       operators.Joins.fuzzyLookup(probes, "probe", part, "p_name", FuzzyMaxDist)
     }),
-    "q_interval_join" -> ((s, dir) => {
+    "q_interval_join" -> Q(Oracles.qIntervalJoin)((s, dir) => {
       // interval×interval overlap: part-derived bands vs order-price
       // windows, bucketed equi-join (no nested loop), one row per
       // overlapping pair with the exact overlap extent in cents
@@ -1536,7 +1560,7 @@ object SparkEntry {
           cents(least(col("hi"), col("ohi"))).as("ov_hi_cents"))
     }),
 
-    "q_full_outer" -> ((s, dir) => {
+    "q_full_outer" -> Q(Oracles.qFullOuter)((s, dir) => {
       // full-outer reconciliation of two keyed aggregates — the standard
       // "who churned / who appeared" comparison; both sides pre-aggregate
       // before the join so the shuffle carries one row per key
@@ -1550,7 +1574,7 @@ object SparkEntry {
           coalesce(col("n95"), lit(0L)).as("n_1995"),
           coalesce(col("n98"), lit(0L)).as("n_1998"))
     }),
-    "q_scalar_subquery" -> ((s, dir) => {
+    "q_scalar_subquery" -> Q(Oracles.qScalarSubquery)((s, dir) => {
       // correlated scalar subquery through the SQL surface — Catalyst
       // de-correlates it into the aggregate+join plan (never a per-row
       // re-execution). The correlation MUST be on a bare column: with
@@ -1578,7 +1602,7 @@ object SparkEntry {
               |                            div (count(*) * 10)
               |                     FROM oy o2 WHERE o2.yr = o.yr)""".stripMargin)
     }),
-    "q_stats_suite" -> ((s, dir) =>
+    "q_stats_suite" -> Q(Oracles.qStatsSuite)((s, dir) =>
       // second-moment statistics from EXACT integer sums: the builtin
       // var_samp/corr/covar/regr_slope accumulate doubles, whose value
       // depends on partition summation order — the flake class SURVEY §6
@@ -1608,7 +1632,7 @@ object SparkEntry {
           expr("CAST(floor((CAST(n AS DOUBLE)*CAST(sxy AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sx AS DOUBLE)) / sqrt((CAST(n AS DOUBLE)*CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE)) * (CAST(n AS DOUBLE)*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE))) * 1e6) AS BIGINT)").as("corr_qp_e6"),
           expr("CAST(floor((CAST(n AS DOUBLE)*CAST(sxy AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sx AS DOUBLE)) / (CAST(n AS DOUBLE)*(CAST(n AS DOUBLE)-1)) * 1e4) AS BIGINT)").as("covar_qp_e4"),
           expr("CAST(floor((CAST(n AS DOUBLE)*CAST(sxy AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sx AS DOUBLE)) / (CAST(n AS DOUBLE)*CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE)) * 1e4) AS BIGINT)").as("slope_pq_e4"))),
-    "q_window_suite" -> ((s, dir) => {
+    "q_window_suite" -> Q(Oracles.qWindowSuite)((s, dir) => {
       // the rank/distribution window family over one partition spec —
       // one sort per partition serves all five functions (single Window
       // exec, no repeated exchange); ties broken by the unique order key
@@ -1629,7 +1653,7 @@ object SparkEntry {
           first(col("price_cents")).over(w).as("first_cents"),
           nth_value(col("price_cents"), 2).over(w).as("second_cents"))
     }),
-    "etl_overwrite_partitions" -> ((s, dir) => {
+    "etl_overwrite_partitions" -> Q(Oracles.etlOverwritePartitions)((s, dir) => {
       // idempotent reprocess: month partitions present in the batch are
       // replaced wholesale (row deletes included), the rest stream
       // through; the batch's partition list broadcasts
@@ -1641,7 +1665,7 @@ object SparkEntry {
         .withColumn("price_cents", col("price_cents") + 55L)
       Staging.overwritePartitions(base, batch, Seq("mkey"))
     }),
-    "q_pct_change" -> ((s, dir) =>
+    "q_pct_change" -> Q(Oracles.qPctChange)((s, dir) =>
       // MoM + YoY growth of monthly revenue per priority, exact ppm
       operators.TimeSeries.pctChange(
         t(s, dir, "orders")
@@ -1650,7 +1674,7 @@ object SparkEntry {
               .cast("long").as("mkey"))
           .agg(sum(cents(col("o_totalprice"))).as("total_cents")),
         "o_orderpriority", "mkey", "total_cents", 1, 12)),
-    "q_cohort_ltv" -> ((s, dir) => {
+    "q_cohort_ltv" -> Q(Oracles.qCohortLtv)((s, dir) => {
       // cumulative value per acquisition cohort by week age, plus the
       // per-user LTV curve (cum cents div cohort size) — exact integers
       val ev = t(s, dir, "events")
@@ -1671,7 +1695,7 @@ object SparkEntry {
         .select(col("cohort_wk"), col("wk_offset"), col("wk_cents"),
           col("cum_cents"), expr("cum_cents div cohort_size").as("ltv_cents"))
     }),
-    "q_cohort_retention" -> ((s, dir) => {
+    "q_cohort_retention" -> Q(Oracles.qCohortRetention)((s, dir) => {
       // cohort = a user's first activity week; the retention matrix
       // counts distinct users per (cohort, weeks-since). Weeks are
       // integer epoch-ms buckets — calendar-week functions differ across
@@ -1683,7 +1707,7 @@ object SparkEntry {
         .groupBy(col("cohort_wk"), (col("wk") - col("cohort_wk")).as("wk_offset"))
         .agg(countDistinct(col("user_id")).as("n_users"))
     }),
-    "q_kaplan_meier" -> ((s, dir) => {
+    "q_kaplan_meier" -> Q(Oracles.qKaplanMeier)((s, dir) => {
       // order-fulfillment survival: duration = days from order to line
       // shipment, administratively censored at the KmCutoff study end —
       // lines shipped by the cutoff are observed events, open lines
@@ -1701,7 +1725,8 @@ object SparkEntry {
           .otherwise(datediff(c, col("o_orderdate"))),
         when(col("l_shipdate") <= c, 1L).otherwise(0L))
     }),
-    "agg_incremental_merge" -> ((s, dir) => {
+    // the merge's oracle IS the full rebuild — incremental must equal it
+    "agg_incremental_merge" -> Q(Oracles.aggIncrementalMerge)((s, dir) => {
       // incremental mart refresh: fold the new batch's aggregate state
       // into the standing state instead of rescanning history — must
       // equal the full recompute (the oracle IS the full recompute)
@@ -1718,7 +1743,7 @@ object SparkEntry {
       Marts.mergeAggState(state, batch, Seq("o_custkey"))
         .withColumn("mean_centicents", expr("(sum_cents * 100L) div n"))
     }),
-    "q_dataset_fingerprint" -> ((s, dir) =>
+    "q_dataset_fingerprint" -> Q(Oracles.qDatasetFingerprint)((s, dir) =>
       // order-invariant copy-validation checksum over lineitem, per
       // returnflag + rollup total; signature columns are all exact
       // renderings (ints, date, money as cents) so both engines hash
@@ -1727,7 +1752,7 @@ object SparkEntry {
         Seq(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_linenumber"), cents(col("l_extendedprice")),
           col("l_shipdate").cast("date")))),
-    "q_join_size_audit" -> ((s, dir) => {
+    "q_join_size_audit" -> Q(Oracles.qJoinSizeAudit)((s, dir) => {
       // candidate-pair explosion audit: exact output size of the
       // lineitem self-join on l_partkey (the blocking-key shape every
       // dedup family starts from), per heaviest key + grand total —
@@ -1735,20 +1760,20 @@ object SparkEntry {
       val li = t(s, dir, "lineitem")
       Audit.joinSizeAudit(li, "l_partkey", li, "l_partkey", AuditTopK)
     }),
-    "q_join_size_est" -> ((s, dir) => {
+    "q_join_size_est" -> Q(Oracles.qJoinSizeEst)((s, dir) => {
       // sampled twin of q_join_size_audit: 1/8 deterministic key
       // sample, exact products on the sample, inverse-rate scale-up —
       // the probe you can afford when the key is near-unique
       val li = t(s, dir, "lineitem")
       Audit.joinSizeEst(li, "l_partkey", li, "l_partkey", JseRatePpm, JseSalt)
     }),
-    "q_skew_audit" -> ((s, dir) =>
+    "q_skew_audit" -> Q(Oracles.qSkewAudit)((s, dir) =>
       // pre-flight shuffle-key skew diagnosis on the lineitem supplier
       // key: hottest keys, their table share, and the salt factor a
       // salted join would need — decided from counts, before any join
       Audit.keySkewAudit(t(s, dir, "lineitem"), col("l_suppkey"),
         SkewTopK, SkewSaltPartitions)),
-    "q_compaction_plan" -> ((s, dir) =>
+    "q_compaction_plan" -> Q(Oracles.qCompactionPlan)((s, dir) =>
       // small-file compaction planning from the (year, month, rows)
       // manifest: stream months in order, cut a write bucket each time
       // the running size crosses a CompactTargetRows multiple
@@ -1758,7 +1783,7 @@ object SparkEntry {
             month(col("l_shipdate")).cast("long").as("m"))
           .agg(count(lit(1)).as("n")),
         col("y"), col("m"), col("n"), CompactTargetRows)),
-    "q_recursive_bom" -> ((s, dir) => {
+    "q_recursive_bom" -> Q(Oracles.qRecursiveBom)((s, dir) => {
       // WITH RECURSIVE workload, Spark-first: decimal-digit forest over
       // part (child k → parent k div 10), path-product quantities;
       // frontier loop never grows on a forest, early-stops when drained
@@ -1769,7 +1794,7 @@ object SparkEntry {
           (col("p_size") % 5 + 1).cast("long").as("qty"))
       operators.Hierarchy.flatten(edges, BomMaxDepth)
     }),
-    "q_corr_matrix" -> ((s, dir) =>
+    "q_corr_matrix" -> Q(Oracles.qCorrMatrix)((s, dir) =>
       // one-pass pairwise Pearson over four exact-integer lineitem
       // measures: all moments in DECIMAL(38,0), the only doubles are
       // correctly-rounded IEEE steps shared by both engines
@@ -1778,14 +1803,15 @@ object SparkEntry {
         "price_cents" -> cents(col("l_extendedprice")),
         "disc_ppm" -> floor(col("l_discount") * lit(1000000.0)),
         "tax_ppm" -> floor(col("l_tax") * lit(1000000.0))))),
-    "sample_topk_weighted" -> ((s, dir) =>
+    "sample_topk_weighted" -> Q(Oracles.sampleTopkWeighted)((s, dir) =>
       // exactly-K quality-weighted sample per source (A-ES): the
       // fixed-budget counterpart of sample_weighted's per-row rates
       Sampling.weightedK(t(s, dir, "documents"), Seq(col("source")),
           col("doc_id"), length(col("text")), WkK, WkSalt)
         .select(col("source"), col("doc_id"),
           length(col("text")).cast("long").as("wt"))),
-    "q_fingerprint_merge" -> ((s, dir) => {
+    // the merge's oracle IS the full recompute — merged state must equal it
+    "q_fingerprint_merge" -> Q(Oracles.qDatasetFingerprint)((s, dir) => {
       // mergeable-fingerprint algebra: fingerprint two disjoint shipdate
       // halves independently, merge the STATES — must equal the full
       // recompute (the oracle IS the full recompute, like etl_scd2_merge)
@@ -1800,7 +1826,7 @@ object SparkEntry {
         Audit.datasetFingerprint(li.filter(col("l_shipdate") >= cut),
           "l_returnflag", cols))
     }),
-    "q_kmv_intersect" -> ((s, dir) =>
+    "q_kmv_intersect" -> Q(Oracles.qKmvIntersect)((s, dir) =>
       // sketch set algebra, completed: pairwise union/intersection/
       // Jaccard estimates across the per-year custkey sketches — from
       // sketch state alone, never rescanning orders
@@ -1808,7 +1834,7 @@ object SparkEntry {
         operators.Sketches.kmvSketch(t(s, dir, "orders"),
           year(col("o_orderdate")).cast("long"), "yearkey",
           col("o_custkey"), KmvK, KmvSalt), "yearkey", "hs", KmvK)),
-    "q_kmv_diff" -> ((s, dir) =>
+    "q_kmv_diff" -> Q(Oracles.qKmvDiff)((s, dir) =>
       // sketch set algebra, final piece: churn-style difference
       // estimates (customers active in year a but not b, and vice
       // versa) from the same per-year sketch state — the union's
@@ -1817,7 +1843,7 @@ object SparkEntry {
         operators.Sketches.kmvSketch(t(s, dir, "orders"),
           year(col("o_orderdate")).cast("long"), "yearkey",
           col("o_custkey"), KmvK, KmvSalt), "yearkey", "hs", KmvK)),
-    "er_resolve" -> ((s, dir) => {
+    "er_resolve" -> Q(Oracles.erResolve)((s, dir) => {
       // entity resolution E2E on a synthesized dirty registry: every
       // part is a base record, every ErTwinMod-th part adds a twin with
       // the last character truncated (edit distance 1); block on first
@@ -1831,7 +1857,7 @@ object SparkEntry {
       Linkage.resolveEntities(base.unionByName(twins), "rec_id",
         "rec_name", ErMaxDist)
     }),
-    "q_bloom_anti" -> ((s, dir) => {
+    "q_bloom_anti" -> Q(Oracles.qBloomAnti)((s, dir) => {
       // anti join with a bloom pre-filter: only might-contain rows enter
       // the exact anti-join shuffle; a bloom "no" is a definitive keep.
       // Result is EXACTLY the plain anti join (false positives evicted),
@@ -1842,7 +1868,7 @@ object SparkEntry {
           cust, "o_custkey", expectedItems = 100000L)
         .select(col("o_orderkey"), col("o_custkey"))
     }),
-    "q_profile" -> ((s, dir) =>
+    "q_profile" -> Q(Oracles.qProfile)((s, dir) =>
       // one-pass column census: per-column counts, exact distincts, and
       // typed min/max — every projection normalized to portable
       // long/string first (cents / epoch-ms), SURVEY §6 rules
@@ -1855,38 +1881,38 @@ object SparkEntry {
         // session's UTC; epoch millis then matches DuckDB's epoch_ms
         "odate_ms" -> unix_millis(col("o_orderdate").cast("timestamp")),
         "o_orderpriority" -> col("o_orderpriority")))),
-    "etl_quarantine" -> ((s, dir) =>
+    "etl_quarantine" -> Q(Oracles.etlQuarantine)((s, dir) =>
       // contract gate audit: per-rule violation counts in one pass,
       // zero-violation rules included (a clean run still gets its row)
       Quality.audit(t(s, dir, "orders"), qcRules)),
-    "q_rand_response" -> ((s, dir) =>
+    "q_rand_response" -> Q(Oracles.qRandResponse)((s, dir) =>
       // local-privacy release: is-urgent bit randomized per order, true
       // per-year urgency rate recovered by the exact Warner debias
       Quality.randomizedResponse(t(s, dir, "orders"),
         year(col("o_orderdate")).cast("long"), col("o_orderkey"),
         col("o_orderpriority") === "1-URGENT", RrFlipPpm, RrSalt)),
-    "q_kanon" -> ((s, dir) =>
+    "q_kanon" -> Q(Oracles.qKanon)((s, dir) =>
       // k-anonymity suppression: QI combinations smaller than KanonK are
       // generalized to '*' before release — census broadcasts back, the
       // rows themselves never shuffle
       Quality.kSuppress(t(s, dir, "customer"), Seq(
           "segment" -> col("c_mktsegment"), "nation" -> col("c_nationkey")), KanonK)
         .select(col("c_custkey"), col("segment"), col("nation"))),
-    "q_ldiversity" -> ((s, dir) =>
+    "q_ldiversity" -> Q(Oracles.qLdiversity)((s, dir) =>
       // l-diversity audit: each (segment, nation) class must span >= l
       // distinct account-balance bands before release — catches the
       // homogeneous classes k-anonymity alone would pass
       Quality.lDiversity(t(s, dir, "customer"), Seq(
           "segment" -> col("c_mktsegment"), "nation" -> col("c_nationkey")),
         floor(col("c_acctbal") / lit(1000.0)).cast("long"), LdivL)),
-    "q_tcloseness" -> ((s, dir) =>
+    "q_tcloseness" -> Q(Oracles.qTcloseness)((s, dir) =>
       // t-closeness audit on the same (segment, nation) classes and
       // balance bands as q_ldiversity: exact integer EMD vs the global
       // band distribution, release gate at TclosePpm
       operators.Quality.tCloseness(t(s, dir, "customer"), Seq(
           "segment" -> col("c_mktsegment"), "nation" -> col("c_nationkey")),
         floor(col("c_acctbal") / lit(1000.0)).cast("long"), TclosePpm)),
-    "q_countmin" -> ((s, dir) => {
+    "q_countmin" -> Q(Oracles.qCountmin)((s, dir) => {
       // count-min sketch vs truth: estimates for every token whose true
       // count clears CmMinCount — n_est >= n_true always (overcount-only
       // error), with the sketch itself d*w counters regardless of corpus
@@ -1900,23 +1926,23 @@ object SparkEntry {
       truth.join(est, col("term") === col("item"))
         .select(col("term"), col("n_true"), col("n_est"))
     }),
-    "q_quantile_est" -> ((s, dir) =>
+    "q_quantile_est" -> Q(Oracles.qQuantileEst)((s, dir) =>
       // mergeable percentile estimates: equi-width histogram (bounded
       // state) instead of a global sort; error <= one bucket width
       Sketches.histogramQuantiles(t(s, dir, "orders"),
         cents(col("o_totalprice")), QuantWidthCents, QuantPs)),
-    "q_equidepth_hist" -> ((s, dir) =>
+    "q_equidepth_hist" -> Q(Oracles.qEquidepthHist)((s, dir) =>
       // equal-count price buckets with exact [lo,hi] ranges — the
       // skew-proof histogram: ranks via the range-partitioned
       // GlobalRank, never a single-partition sort
       Sketches.equidepthHist(t(s, dir, "orders"),
         cents(col("o_totalprice")), col("o_orderkey"), EqdepthBuckets)),
-    "q_benford" -> ((s, dir) =>
+    "q_benford" -> Q(Oracles.qBenford)((s, dir) =>
       // first-digit conformity of order totals per priority class —
       // the fabricated-amounts screen; absent digits still score
       Audit.benford(t(s, dir, "orders"), col("o_orderpriority"),
         cents(col("o_totalprice")))),
-    "q_theilsen" -> ((s, dir) =>
+    "q_theilsen" -> Q(Oracles.qTheilsen)((s, dir) =>
       // robust monthly-revenue trend per priority: median pairwise
       // slope over the same series OLS (q_trend_fit) fits — one wild
       // month barely moves it
@@ -1927,12 +1953,12 @@ object SparkEntry {
               .cast("long").as("mkey"))
           .agg(sum(cents(col("o_totalprice"))).as("total_cents")),
         "o_orderpriority", "mkey", "total_cents")),
-    "sample_epoch_shuffle" -> ((s, dir) =>
+    "sample_epoch_shuffle" -> Q(Oracles.sampleEpochShuffle)((s, dir) =>
       // two independent deterministic training orders of the corpus,
       // sharded so no global sort exists anywhere
       Sampling.epochShuffle(t(s, dir, "documents"), col("doc_id"),
         EpochShuffleEpochs, EpochShuffleShards, EpochSalt)),
-    "q_zorder" -> ((s, dir) =>
+    "q_zorder" -> Q(Oracles.qZorder)((s, dir) =>
       // Morton Z-value for 2-D layout clustering (operators.Layout): the
       // mapping itself is oracle-checked here; the write discipline
       // (range-partition by Z + sort within) is spec-checked for
@@ -1940,27 +1966,27 @@ object SparkEntry {
       t(s, dir, "orders").select(col("o_orderkey"),
         operators.Layout.zValue(col("o_custkey") % 65536, col("o_orderkey") % 65536)
           .as("zval"))),
-    "q_skipping_audit" -> ((s, dir) =>
+    "q_skipping_audit" -> Q(Oracles.qSkippingAudit)((s, dir) =>
       // the measured payoff of the Z-order layout: per-file min/max
       // stats vs a y-band predicate, zorder vs linear-on-x layouts;
       // matched_in_skipped must be 0 (min/max pruning never lies)
       operators.Layout.skippingAudit(t(s, dir, "orders"),
         col("o_custkey") % 65536, col("o_orderkey") % 65536,
         col("o_orderkey"), SkipFiles, 16, SkipYLo, SkipYHi)),
-    "q_hilbert" -> ((s, dir) =>
+    "q_hilbert" -> Q(Oracles.qHilbert)((s, dir) =>
       // Hilbert index for 2-D layout clustering: the mapping itself is
       // oracle-checked (one packed-int64 fold, replayed token-for-token
       // by the DuckDB list_reduce twin); locality payoff in q_hilbert_audit
       t(s, dir, "orders").select(col("o_orderkey"),
         operators.Layout.hilbertValue(col("o_custkey") % HilbertMod,
           col("o_orderkey") % HilbertMod, HilbertBits).as("hval"))),
-    "q_hilbert_audit" -> ((s, dir) =>
+    "q_hilbert_audit" -> Q(Oracles.qHilbertAudit)((s, dir) =>
       // hilbert vs zorder vs linear on the same 15-bit grid and y band:
       // the curve choice as measured skip counts, not folklore
       operators.Layout.hilbertAudit(t(s, dir, "orders"),
         col("o_custkey") % HilbertMod, col("o_orderkey") % HilbertMod,
         col("o_orderkey"), SkipFiles, HilbertBits, SkipYLo, SkipYHi)),
-    "q_stress" -> ((s, dir) => {
+    "q_stress" -> Q(Oracles.qStress)((s, dir) => {
       // sampled hop-bounded stress centrality (integer betweenness
       // family): shortest-path counts THROUGH each node of the trading
       // graph from the harmonic seed sample — σ forward, ψ backward,
@@ -1977,13 +2003,13 @@ object SparkEntry {
         .select(col("s_suppkey").as("node"))
       operators.Bfs.stressCentrality(edges, seeds, BfsHops)
     }),
-    "events_interarrival" -> ((s, dir) =>
+    "events_interarrival" -> Q(Oracles.eventsInterarrival)((s, dir) =>
       // per-type cadence profile: exact millisecond gaps between each
       // user's consecutive events — the evidence behind cooldown and
       // session-gap thresholds
       EventOps.interArrival(t(s, dir, "events"), col("user_id"),
         col("event_type"), col("ts"), col("event_id"))),
-    "q_fulfillment_latency" -> ((s, dir) => {
+    "q_fulfillment_latency" -> Q(Oracles.qFulfillmentLatency)((s, dir) => {
       // order→first-shipment latency quartiles per priority: exact day
       // gaps through the exactQuartiles rank selector
       val first = t(s, dir, "lineitem").groupBy(col("l_orderkey"))
@@ -1996,7 +2022,7 @@ object SparkEntry {
             col("o_orderkey")),
         col("p"), "prio", col("days"), col("o_orderkey"))
     }),
-    "q_abc_class" -> ((s, dir) => {
+    "q_abc_class" -> Q(Oracles.qAbcClass)((s, dir) => {
       // ABC / Pareto classification: customers in descending-revenue
       // order, class cut at 80% / 95% cumulative share (exact ppm via
       // the distributed globalCumsum — never a global window)
@@ -2022,7 +2048,7 @@ object SparkEntry {
         .select(col("abc"), col("n_customers"), col("rev_cents"),
           expr("CAST(rev_cents AS DECIMAL(38,0)) * 1000000 div trev").as("share_ppm"))
     }),
-    "q_lorenz" -> ((s, dir) => {
+    "q_lorenz" -> Q(Oracles.qLorenz)((s, dir) => {
       // Lorenz curve deciles: customers ranked by revenue ascending,
       // cumulative revenue share per decile in exact ppm — the curve
       // behind q_gini's scalar
@@ -2047,12 +2073,12 @@ object SparkEntry {
           // at sf1 — DECIMAL(38,0) product, div returns BIGINT
           expr("CAST(__cum AS DECIMAL(38,0)) * 1000000 div __t").as("cum_share_ppm"))
     }),
-    "events_zscore_alerts" -> ((s, dir) =>
+    "events_zscore_alerts" -> Q(Oracles.eventsZscoreAlerts)((s, dir) =>
       // batch twin of the streaming z-alert: cumulative prior stats per
       // type, division-free DECIMAL(38,0) test — backfill == live feed
       EventOps.zscoreAlerts(t(s, dir, "events"), col("event_type"),
         col("ts"), col("event_id"), cents(col("value")))),
-    "q_rolling_corr" -> ((s, dir) => {
+    "q_rolling_corr" -> Q(Oracles.qRollingCorr)((s, dir) => {
       // trailing-28-day correlation of daily order count vs revenue —
       // the co-movement monitor; exact decimal window moments, one
       // shared IEEE corr per row, over the bounded day series
@@ -2077,7 +2103,7 @@ object SparkEntry {
               "cast(n * srr - sr * sr as double)), 4)"))
             .otherwise(lit(null).cast("double")).as("corr"))
     }),
-    "etl_gap_partitions" -> ((s, dir) => {
+    "etl_gap_partitions" -> Q(Oracles.etlGapPartitions)((s, dir) => {
       // backfill planning: expected month partitions (generated axis)
       // vs observed; a deterministically-suppressed month (1996-06) is
       // the real positive the plan must list
@@ -2096,7 +2122,7 @@ object SparkEntry {
       expected.join(observed, Seq("part_key"), "left_anti")
         .select(col("part_key"))
     }),
-    "q_runs_test" -> ((s, dir) => {
+    "q_runs_test" -> Q(Oracles.qRunsTest)((s, dir) => {
       // randomness audit of the daily order-count series: above/below
       // the exact global mean, then the Wald–Wolfowitz run count
       val daily = t(s, dir, "orders")
@@ -2109,7 +2135,7 @@ object SparkEntry {
           .select(col("k"), (col("c") * col("nd") > col("tc")).as("b")),
         col("k"), col("b"))
     }),
-    "q_psi_drift" -> ((s, dir) => {
+    "q_psi_drift" -> Q(Oracles.qPsiDrift)((s, dir) => {
       // population stability index across the chi2 gate's snapshot
       // split and bucketing — the credit-risk member of the drift family
       val o = t(s, dir, "orders")
@@ -2120,7 +2146,7 @@ object SparkEntry {
         o.where(col("y") > lit(DriftSplitYear)),
         expr(s"c div $DriftBucketCents"))
     }),
-    "q_quantile_scale" -> ((s, dir) =>
+    "q_quantile_scale" -> Q(Oracles.qQuantileScale)((s, dir) =>
       // quantile feature normalization: each price mapped to its exact
       // corpus percentile ppm under a total order (GlobalRank two-pass,
       // never a global window) — the rank-uniformization step before
@@ -2134,7 +2160,7 @@ object SparkEntry {
           .agg(count(lit(1)).as("n"))))
         .select(col("okey"), col("lnum"), col("c"),
           expr("(grank - 1) * 1000000 div (n - 1)").as("pct_ppm"))),
-    "q_mutual_best" -> ((s, dir) => {
+    "q_mutual_best" -> Q(Oracles.qMutualBest)((s, dir) => {
       // reciprocal best match (mutual nearest neighbor) — the ER
       // pairing rule that kills asymmetric lookalikes: keep (a, b) only
       // when each is the other's top Jaro–Winkler match in the block
@@ -2154,7 +2180,7 @@ object SparkEntry {
             col("x.k1") < col("x.k2"))
         .select(col("x.k1").as("k1"), col("x.k2").as("k2"), col("x.jw").as("jw"))
     }),
-    "q_assortativity" -> ((s, dir) => {
+    "q_assortativity" -> Q(Oracles.qAssortativity)((s, dir) => {
       // degree assortativity of the trading graph: Pearson r of
       // endpoint degrees over the symmetric edge list — negative =
       // hub-to-leaf (the usual bipartite-projection shape); exact
@@ -2173,13 +2199,13 @@ object SparkEntry {
       Sketches.corrMatrix(withDeg,
         Seq("d_src" -> col("sd"), "d_dst" -> col("dd")))
     }),
-    "text_langid_confusion" -> ((s, dir) =>
+    "text_langid_confusion" -> Q(Oracles.textLangidConfusion)((s, dir) =>
       // langid evaluation closed loop: confusion counts of the labeled
       // lang column vs the stopword-vote prediction
       t(s, dir, "documents")
         .select(col("lang"), T.langId(col("text")).as("pred"))
         .groupBy(col("lang"), col("pred")).agg(count(lit(1)).as("n"))),
-    "q_sql_surface" -> ((s, dir) => {
+    "q_sql_surface" -> Q(Oracles.qSqlSurface)((s, dir) => {
       // the spark.sql(...) entrypoint exercised end-to-end: a Q10-shape
       // returned-revenue ranking written as SQL TEXT over temp views —
       // same Catalyst plan machinery, proving the library's tables
@@ -2200,26 +2226,26 @@ object SparkEntry {
         ORDER BY lost_cents DESC, c.c_custkey
         LIMIT 20""")
     }),
-    "q_cramers_v" -> ((s, dir) =>
+    "q_cramers_v" -> Q(Oracles.qCramersV)((s, dir) =>
       // association strength companion to q_mutual_info: Cramér's V
       // from exact chi-squared cell arithmetic
       Sketches.cramersV(t(s, dir, "orders"),
         col("o_orderpriority"), col("o_orderstatus"))),
-    "q_mutual_info" -> ((s, dir) =>
+    "q_mutual_info" -> Q(Oracles.qMutualInfo)((s, dir) =>
       // association screen between priority and status — near-zero MI on
       // independent synthetic columns exercises the negative-rounding
       // truncation path both engines must agree on
       Sketches.mutualInfo(t(s, dir, "orders"),
         col("o_orderpriority"), col("o_orderstatus"))),
-    "sample_kfold" -> ((s, dir) =>
+    "sample_kfold" -> Q(Oracles.sampleKfold)((s, dir) =>
       // deterministic 5-fold assignment + per-fold class balance audit
       Sampling.kfoldBalance(t(s, dir, "documents"), col("doc_id"),
         col("lang"), KfoldK, KfoldSalt)),
-    "dim_calendar" -> ((s, dir) =>
+    "dim_calendar" -> Q(Oracles.dimCalendar)((s, dir) =>
       // generated conformed calendar dimension — spark.range, no driver
       // loop; dow/iso_week conventions pinned cross-engine
       Star.calendarDim(s, CalStart, CalDays)),
-    "etl_surrogate_assign" -> ((s, dir) => {
+    "etl_surrogate_assign" -> Q(Oracles.etlSurrogateAssign)((s, dir) => {
       // incremental surrogate keys: the pre-existing dim keeps its sks
       // verbatim, unseen brands extend from max(sk) in natural-key
       // order through GlobalRank — no global-sort window
@@ -2229,7 +2255,7 @@ object SparkEntry {
       val existing = Star.assignSurrogates(seed, first, "bkey", "sk")
       Star.assignSurrogates(existing, brands, "bkey", "sk")
     }),
-    "q_changepoint" -> ((s, dir) =>
+    "q_changepoint" -> Q(Oracles.qChangepoint)((s, dir) =>
       // best single split of each priority's monthly revenue series
       // (binary segmentation step): exact prefix sums, engine-exact
       // argmax, truncating segment means
@@ -2239,7 +2265,7 @@ object SparkEntry {
             .cast("long").as("mkey"),
           cents(col("o_totalprice")).as("c")),
         col("grp"), col("mkey"), col("c"))),
-    "etl_scd2_audit" -> ((s, dir) => {
+    "etl_scd2_audit" -> Q(Oracles.etlScd2Audit)((s, dir) => {
       // history-invariant audit: the clean scd2 build must score zero
       // defects; a deliberately duplicated slice (keys ≡0 mod 97) must
       // light up overlaps and duplicate currents — both rows oracle-checked
@@ -2257,7 +2283,7 @@ object SparkEntry {
       audit("clean", hist).unionByName(audit("broken",
         hist.unionByName(hist.where(col("o_custkey") % 97 === 0))))
     }),
-    "etl_wap" -> ((s, dir) => {
+    "etl_wap" -> Q(Oracles.etlWap)((s, dir) => {
       // write-audit-publish: stage a batch, run the contract rules,
       // publish ONLY an all-green batch. Attempt 1 carries injected
       // violations (status corrupted for keys ≡0 mod 101) and must
@@ -2290,12 +2316,12 @@ object SparkEntry {
           .otherwise(col("o_orderstatus")))
       attempt("broken", broken).unionByName(attempt("fixed", base))
     }),
-    "events_bots" -> ((s, dir) =>
+    "events_bots" -> Q(Oracles.eventsBots)((s, dir) =>
       // rate-based bot census: users sustaining ≥ BotRate events in a
       // minute for ≥ BotMinutes distinct minutes — pure integer rates
       EventOps.botCensus(t(s, dir, "events"), col("user_id"), col("ts"),
         BotRate, BotMinutes)),
-    "etl_late_dim" -> ((s, dir) => {
+    "etl_late_dim" -> Q(Oracles.etlLateDim)((s, dir) => {
       // early-arriving facts: the part feed lags 10% of keys; inferred
       // placeholders keep the star join total, then half the laggards
       // land and replace their placeholders
@@ -2306,7 +2332,7 @@ object SparkEntry {
       Staging.backfillDim(aug,
         part.where(col("p_partkey") % LateDimArriveMod === 0), "p_partkey")
     }),
-    "q_reciprocity" -> ((s, dir) => {
+    "q_reciprocity" -> Q(Oracles.qReciprocity)((s, dir) => {
       // directed reciprocity of the supplier hand-off graph: share of
       // edges whose reverse also exists — near 1 means the "direction"
       // carries no information and SCC ≈ CC
@@ -2325,7 +2351,7 @@ object SparkEntry {
         .select(col("n_edges"), col("n_recip"),
           expr("n_recip * 1000000 div n_edges").as("recip_ppm"))
     }),
-    "sample_negatives" -> ((s, dir) =>
+    "sample_negatives" -> Q(Oracles.sampleNegatives)((s, dir) =>
       // word2vec-style negative-sampling table: exactly-K corpus terms
       // drawn by the unigram^(3/4) distribution through the A-ES
       // exactly-K machinery — deterministic, RNG-free
@@ -2337,7 +2363,7 @@ object SparkEntry {
             expr("cast(floor(pow(cast(cf as double), 0.75) * 1e6) as long)")),
         Seq(lit("all")), col("term"), col("w34"), NegK, NegSalt)
         .select(col("term"), col("cf"), col("w34"))),
-    "q_scc" -> ((s, dir) => {
+    "q_scc" -> Q(Oracles.qScc)((s, dir) => {
       // directed supplier hand-off graph: consecutive lineitems of each
       // order pass work supplier→supplier (lead over the per-order line
       // sequence — a partitioned window, never global); SCC groups =
@@ -2351,7 +2377,7 @@ object SparkEntry {
         .select(col("l_suppkey").as("src"), col("nxt").as("dst"))
       operators.Scc.scc(edges)
     }),
-    "q_jaro_pairs" -> ((s, dir) => {
+    "q_jaro_pairs" -> Q(Oracles.qJaroPairs)((s, dir) => {
       // transposition-tolerant name linkage: nation-blocked supplier
       // pairs scored by the native graft_jaro_winkler expression
       // (codegen'd static kernel — no UDF wall at the candidate scorer,
@@ -2365,7 +2391,7 @@ object SparkEntry {
           round(T.jaroWinkler(col("a.s_name"), col("b.s_name")), 4).as("jw"))
         .where(col("jw") >= lit(JaroMinSim))
     }),
-    "q_triangles" -> ((s, dir) => {
+    "q_triangles" -> Q(Oracles.qTriangles)((s, dir) => {
       // per-part triangle counts over the "parts bought together" graph;
       // degree orientation bounds the wedge fan-out (operators.Triangles)
       val pairs = t(s, dir, "lineitem")
@@ -2375,7 +2401,7 @@ object SparkEntry {
         .select(col("x.p").as("src"), col("y.p").as("dst"))
       operators.Triangles.perNodeCounts(edges)
     }),
-    "q_degree_hist" -> ((s, dir) => {
+    "q_degree_hist" -> Q(Oracles.qDegreeHist)((s, dir) => {
       // degree-distribution census of the co-purchase graph: per degree
       // the node count and exact ppm share — the first thing anyone
       // asks of a graph (skew! hubs!) and the input to the CnMaxDeg-
@@ -2393,7 +2419,7 @@ object SparkEntry {
         .select(col("degree"), col("n_nodes"),
           expr("1000000L * n_nodes div n_total").as("share_ppm"))
     }),
-    "q_msf" -> ((s, dir) => {
+    "q_msf" -> Q(Oracles.qMsf)((s, dir) => {
       // Borůvka minimum spanning forest of the co-purchase graph under
       // md5 edge weights; hash-checked against a generated per-round
       // replay twin (the (w,u,v) total order makes every round's pick
@@ -2409,7 +2435,7 @@ object SparkEntry {
           "msf"))
       operators.Msf.msf(edges)
     }),
-    "q_clustering_coef" -> ((s, dir) => {
+    "q_clustering_coef" -> Q(Oracles.qClusteringCoef)((s, dir) => {
       // local clustering coefficient over the co-purchase graph: how
       // clique-like each part's neighborhood is, exact ppm; zero-tri
       // nodes score 0 rather than vanish
@@ -2420,7 +2446,7 @@ object SparkEntry {
         .select(col("x.p").as("src"), col("y.p").as("dst"))
       operators.Triangles.clusteringCoef(edges)
     }),
-    "q_pagerank" -> ((s, dir) => {
+    "q_pagerank" -> Q(Oracles.qPagerank)((s, dir) => {
       // fixed-point integer PageRank over the supplier↔customer graph
       // (both arc directions of each trading pair); bit-identical on any
       // engine/partitioning — see operators.PageRank
@@ -2432,7 +2458,7 @@ object SparkEntry {
         .union(pairs.select((col("ck") + lit(PrCustOffset)).as("src"), col("sk").as("dst")))
       operators.PageRank.pageRank(edges, PrIters)
     }),
-    "q_pagerank_weighted" -> ((s, dir) => {
+    "q_pagerank_weighted" -> Q(Oracles.qPagerankWeighted)((s, dir) => {
       // volume-weighted variant: each trading pair's edge carries its
       // distinct-order count, so rank flows ∝ trade volume, not 1/deg
       val pairs = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
@@ -2446,20 +2472,20 @@ object SparkEntry {
           col("sk").as("dst"), col("w")))
       operators.PageRank.pageRankWeighted(edges, PrIters)
     }),
-    "q_link_predict" -> ((s, dir) =>
+    "q_link_predict" -> Q(Oracles.qLinkPredict)((s, dir) =>
       // supplier-pair similarity by shared supplied parts: capped wedge
       // enumeration + exact integer Jaccard (ppm) on the filtered graph
       operators.LinkPredict.scores(
         t(s, dir, "lineitem").select(col("l_suppkey").as("u"),
           col("l_partkey").as("w")),
         CnMaxDeg, CnMinCommon)),
-    "q_assoc_rules" -> ((s, dir) =>
+    "q_assoc_rules" -> Q(Oracles.qAssocRules)((s, dir) =>
       // market-basket pairs over order baskets: support / directed
       // confidence / lift in exact ppm, tail pruned at the pair agg
       operators.Frequency.associationRules(
         t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey")),
         "l_orderkey", "l_partkey", AssocMinPairs)),
-    "q_kcore" -> ((s, dir) => {
+    "q_kcore" -> Q(Oracles.qKcore)((s, dir) => {
       // k-core peeling on the symmetric trading graph: nodes that keep
       // >= k surviving partners after KcoreRounds peels
       val pairs = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
@@ -2470,7 +2496,7 @@ object SparkEntry {
         .union(pairs.select((col("ck") + lit(PrCustOffset)).as("src"), col("sk").as("dst")))
       operators.PageRank.kCorePeel(edges, KcoreK, KcoreRounds)
     }),
-    "q_hits" -> ((s, dir) => {
+    "q_hits" -> Q(Oracles.qHits)((s, dir) => {
       // HITS hubs/authorities on the DIRECTED supplier→customer arcs
       // (who supplies the well-supplied customers) — integer
       // fixed-iteration form, rankings ≡ the normalized algorithm
@@ -2481,7 +2507,7 @@ object SparkEntry {
           (col("o_custkey") + lit(PrCustOffset)).as("dst")).distinct()
       operators.PageRank.hits(pairs, HitsIters)
     }),
-    "q_ppr" -> ((s, dir) => {
+    "q_ppr" -> Q(Oracles.qPpr)((s, dir) => {
       // personalized PageRank: proximity to the seed suppliers
       // (suppkey % BfsSeedMod = 0) over the same trading graph
       val pairs = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
@@ -2494,7 +2520,7 @@ object SparkEntry {
         .filter(col("s_suppkey") % BfsSeedMod === 0).select(col("s_suppkey"))
       operators.PageRank.personalizedPageRank(edges, seeds, PrIters)
     }),
-    "q_label_prop" -> ((s, dir) => {
+    "q_label_prop" -> Q(Oracles.qLabelProp)((s, dir) => {
       // community detection by majority vote on the same trading graph —
       // LP keeps densely-connected groups apart where CC would merge
       // anything bridged by a single edge
@@ -2506,7 +2532,7 @@ object SparkEntry {
         .union(pairs.select((col("ck") + lit(PrCustOffset)).as("src"), col("sk").as("dst")))
       operators.LabelProp.labelPropagation(edges, LpIters)
     }),
-    "q_louvain_move" -> ((s, dir) => {
+    "q_louvain_move" -> Q(Oracles.qLouvainMove)((s, dir) => {
       // greedy modularity agglomeration: one deterministic Louvain
       // local-move round from singletons — each node joins the neighbor
       // with the best strictly-positive exact-integer gain
@@ -2518,7 +2544,7 @@ object SparkEntry {
         .union(pairs.select((col("ck") + lit(PrCustOffset)).as("src"), col("sk").as("dst")))
       operators.Louvain.localMove(edges)
     }),
-    "q_bfs_reach" -> ((s, dir) => {
+    "q_bfs_reach" -> Q(Oracles.qBfsReach)((s, dir) => {
       // recursive-CTE-shaped reachability: min hop distance from the
       // seed suppliers over the trading graph, frontier-iterated
       val pairs = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
@@ -2533,7 +2559,7 @@ object SparkEntry {
         .select(col("s_suppkey").as("node"))
       operators.Bfs.hopDistances(edges, seeds, BfsHops)
     }),
-    "q_eccentricity" -> ((s, dir) => {
+    "q_eccentricity" -> Q(Oracles.qEccentricity)((s, dir) => {
       // hop-bounded eccentricity census from the harmonic seed sample:
       // per seed the farthest-reached hop and reach count — the cheap
       // diameter lower-bound / disconnection smell
@@ -2552,7 +2578,7 @@ object SparkEntry {
         .agg(max(col("dist")).as("ecc_capped"),
           sum(when(col("dist") > 0, 1L).otherwise(0L)).as("n_reached"))
     }),
-    "q_harmonic" -> ((s, dir) => {
+    "q_harmonic" -> Q(Oracles.qHarmonic)((s, dir) => {
       // sampled truncated harmonic centrality: Σ 1/hop-dist (exact e6)
       // per seed supplier over the trading graph — per-seed BFS keyed
       // (seed, node), one pass for every seed at once
@@ -2568,7 +2594,7 @@ object SparkEntry {
         .select(col("s_suppkey").as("node"))
       operators.Bfs.harmonicCentrality(edges, seeds, BfsHops)
     }),
-    "q_sssp" -> ((s, dir) => {
+    "q_sssp" -> Q(Oracles.qSssp)((s, dir) => {
       // weighted recursive-CTE workload: min-plus shortest paths from
       // the seed suppliers over the trading graph, edge weight a
       // deterministic 1..10 from the endpoint keys (symmetric by
@@ -2588,14 +2614,14 @@ object SparkEntry {
     }),
 
     // ---- §2.8 deterministic sampling ----
-    "sample_bernoulli" -> ((s, dir) =>
+    "sample_bernoulli" -> Q(Oracles.sampleBernoulli)((s, dir) =>
       Sampling.bernoulli(t(s, dir, "documents"), col("doc_id"), SampleRate, SampleSalt)
         .select(col("doc_id"), H.hash32(col("doc_id"), SampleSalt).as("h"))),
-    "sample_stratified" -> ((s, dir) =>
+    "sample_stratified" -> Q(Oracles.sampleStratified)((s, dir) =>
       Sampling.stratifiedK(t(s, dir, "events"), Seq(col("event_type")),
           col("event_id"), StratumK, SampleSalt)
         .select(col("event_id"), col("event_type"))),
-    "sample_weighted" -> ((s, dir) => {
+    "sample_weighted" -> Q(Oracles.sampleWeighted)((s, dir) => {
       // quality-weighted corpus downsampling: keep probability = qscore,
       // computed ONCE as a column (the filter predicate and the output
       // both reference the attribute, not a second evaluation)
@@ -2604,7 +2630,7 @@ object SparkEntry {
       Sampling.weighted(d, col("doc_id"), col("qscore"), SampleSalt)
         .select(col("doc_id"), col("qscore"))
     }),
-    "sample_dsir" -> ((s, dir) => {
+    "sample_dsir" -> Q(Oracles.sampleDsir)((s, dir) => {
       // domain-matched data selection: score the whole corpus by hashed
       // n-gram importance ratio against the English subset as the
       // target domain, keep the top-K lookalikes
@@ -2612,13 +2638,13 @@ object SparkEntry {
       Sampling.dsirTopK(docs, docs.where(col("lang") === "en"),
         "doc_id", "text", DsirBuckets, DsirTopK)
     }),
-    "sample_split" -> ((s, dir) =>
+    "sample_split" -> Q(Oracles.sampleSplit)((s, dir) =>
       // deterministic train/val/test assignment (90/5/5 permille hash
       // ranges): disjoint, exhaustive, stable under corpus growth
       Sampling.split(t(s, dir, "documents"), col("doc_id"), SplitSalt,
           SplitTrainPm, SplitValPm)
         .select(col("doc_id"), col("split"))),
-    "sample_split_grouped" -> ((s, dir) =>
+    "sample_split_grouped" -> Q(Oracles.sampleSplitGrouped)((s, dir) =>
       // leakage-safe variant of sample_split: the hash key is the doc's
       // SOURCE domain, so a domain's docs can never straddle train/test
       // — near-duplicates cluster within domains, and splitting by doc
@@ -2626,12 +2652,12 @@ object SparkEntry {
       Sampling.split(t(s, dir, "documents"), col("source"), GroupSplitSalt,
           SplitTrainPm, SplitValPm)
         .select(col("doc_id"), col("source"), col("split"))),
-    "sample_mix_budget" -> ((s, dir) =>
+    "sample_mix_budget" -> Q(Oracles.sampleMixBudget)((s, dir) =>
       // pre-sampling mix plan: 170% of corpus char mass spread uniform
       // across sources, ≤2 epochs each, one water-filling redistribution
       Sampling.mixBudget(t(s, dir, "documents"), "source", col("n_chars"),
         PlanBudgetPct, PlanMaxEpochs)),
-    "sample_mixture" -> ((s, dir) =>
+    "sample_mixture" -> Q(Oracles.sampleMixture)((s, dir) =>
       // domain-mixture curation: per-source keep-rates so the sample
       // approaches the target mixture under a char budget, rates capped
       // at availability (the quadratic target ramp exercises the cap)
@@ -2640,30 +2666,30 @@ object SparkEntry {
         .select(col("doc_id"), col("source"), col("rate_ppm"))),
 
     // ---- §2.5 text analysis ----
-    "text_vocab" -> ((s, dir) =>
+    "text_vocab" -> Q(Oracles.textVocab)((s, dir) =>
       TextOps.vocabulary(t(s, dir, "documents"), "text", VocabTopN)
         .select(col("term"), col("n"), col("rank"))),
-    "text_tfidf" -> ((s, dir) =>
+    "text_tfidf" -> Q(Oracles.textTfidf)((s, dir) =>
       TextOps.tfidfTopTerms(t(s, dir, "documents"), "doc_id", "text", TfidfTopK)
         .select(col("doc_id"), col("term"), col("tfidf"), col("rk"))),
-    "text_repetition" -> ((s, dir) =>
+    "text_repetition" -> Q(Oracles.textRepetition)((s, dir) =>
       // Gopher-style boilerplate signals: within-doc duplicate-line and
       // top-bigram shares as integer ppm
       TextOps.repetitionSignals(t(s, dir, "documents"), "doc_id", "text", LineTokens)),
-    "text_chunk" -> ((s, dir) =>
+    "text_chunk" -> Q(Oracles.textChunk)((s, dir) =>
       TextOps.chunk(t(s, dir, "documents"), "doc_id", "text", ChunkSize, ChunkStride)),
-    "text_dedup_lines" -> ((s, dir) =>
+    "text_dedup_lines" -> Q(Oracles.textDedupLines)((s, dir) =>
       TextOps.dedupLines(t(s, dir, "documents"), "doc_id", "text", LineTokens)),
-    "text_oov" -> ((s, dir) =>
+    "text_oov" -> Q(Oracles.textOov)((s, dir) =>
       TextOps.oovRate(t(s, dir, "documents"), "doc_id", "text", VocabTopN)),
-    "dedup_keep_best" -> ((s, dir) =>
+    "dedup_keep_best" -> Q(Oracles.dedupKeepBest)((s, dir) =>
       Dedup.keepBestInCluster(t(s, dir, "documents"), "doc_id", "text", JaccardMin)),
-    "sample_ht_estimate" -> ((s, dir) =>
+    "sample_ht_estimate" -> Q(Oracles.sampleHtEstimate)((s, dir) =>
       // corpus char-mass total estimated from the 1/8 salted-hash
       // sample — unbiased, replayable on any engine
       Sampling.htEstimate(t(s, dir, "documents"), col("doc_id"),
         col("n_chars"), HtRatePpm, HtSalt)),
-    "text_url_dedup" -> ((s, dir) => {
+    "text_url_dedup" -> Q(Oracles.textUrlDedup)((s, dir) => {
       // canonical-URL dedup: per doc a URL whose scheme / www / port /
       // tracking params / param order / fragment vary by id, while
       // (source, id div 4) fixes the underlying page — the census must
@@ -2684,7 +2710,7 @@ object SparkEntry {
       operators.UrlOps.urlDedup(
         t(s, dir, "documents").withColumn("url", url), "doc_id", "url")
     }),
-    "text_domain_stats" -> ((s, dir) => {
+    "text_domain_stats" -> Q(Oracles.textDomainStats)((s, dir) => {
       // host/domain-level curation: the documents table has no URL
       // column, so the query synthesizes a deterministic URL per doc
       // (scheme / www / multi-part-TLD / port / path / query variants —
@@ -2705,29 +2731,29 @@ object SparkEntry {
       operators.UrlOps.domainStats(
         t(s, dir, "documents").withColumn("url", url), "doc_id", "url", "text")
     }),
-    "dedup_prefix_filter" -> ((s, dir) =>
+    "dedup_prefix_filter" -> Q(Oracles.dedupPrefixFilter)((s, dir) =>
       // EXACT all-pairs token-Jaccard join (prefix + length filtering) —
       // the recall-lossless complement to dedup_minhash_lsh
       Dedup.prefixFilterJaccard(t(s, dir, "documents"), "doc_id", "text",
         JaccardMinNum, JaccardMinDen)),
-    "q_heavy_hitters" -> ((s, dir) =>
+    "q_heavy_hitters" -> Q(Oracles.qHeavyHitters)((s, dir) =>
       // exact frequent tokens via Misra–Gries candidates + exact verify
       Frequency.heavyHitters(
           t(s, dir, "documents").select(explode(T.tokens(col("text"))).as("tok")),
           col("tok"), HhDenom, HhMgK)
         .select(col("item").as("term"), col("n"), col("n_total"))),
-    "text_token_count" -> ((s, dir) =>
+    "text_token_count" -> Q(Oracles.textTokenCount)((s, dir) =>
       t(s, dir, "documents").select(col("doc_id"),
         T.tokenCount(col("text")).as("n_ws"), T.bpeTokenCount(col("text")).as("n_bpe"))),
-    "text_langid" -> ((s, dir) => {
+    "text_langid" -> Q(Oracles.textLangId)((s, dir) => {
       val d = t(s, dir, "documents")
       val scores = T.langStopwords.map { case (l, ws) => T.stopwordHits(col("text"), ws).as(s"s_$l") }
       d.select((col("doc_id") +: (T.langId(col("text")).as("lang_pred") +: scores)): _*)
     }),
-    "text_quality" -> ((s, dir) =>
+    "text_quality" -> Q(Oracles.textQuality)((s, dir) =>
       t(s, dir, "documents").select(col("doc_id"),
         T.tokenCount(col("text")).as("n_tokens"), T.qualityScore(col("text")).as("qscore"))),
-    "text_readability" -> ((s, dir) =>
+    "text_readability" -> Q(Oracles.textReadability)((s, dir) =>
       // Flesch-style readability on the deterministic syllable proxy;
       // integer-divided e3 score so every engine agrees bit-for-bit
       t(s, dir, "documents").select(col("doc_id"),
@@ -2738,7 +2764,7 @@ object SparkEntry {
           when(col("n_words") === 0, lit(null).cast("long"))
             .otherwise(expr("206835 - (1015 * n_words) div n_sentences" +
               " - (84600 * n_syllables) div n_words")))),
-    "text_script_mix" -> ((s, dir) => {
+    "text_script_mix" -> Q(Oracles.textScriptMix)((s, dir) => {
       // Unicode script census + homoglyph smell: a tiny Cyrillic
       // presence inside otherwise-Latin text is the lookalike-spoofing
       // signature (pаypal); deterministic o→о injection supplies the
@@ -2754,12 +2780,12 @@ object SparkEntry {
         .withColumn("homoglyph_suspect",
           col("n_cyrillic") > 0 && col("n_cyrillic") * 10 < col("n_latin"))
     }),
-    "text_source_cover" -> ((s, dir) =>
+    "text_source_cover" -> Q(Oracles.textSourceCover)((s, dir) =>
       // which sources to take next, by marginal vocabulary coverage —
       // greedy set cover with the classic (1−1/e) guarantee
       TextOps.sourceCover(t(s, dir, "documents"), "source", "text",
         SourceCoverK)),
-    "text_burstiness" -> ((s, dir) => {
+    "text_burstiness" -> Q(Oracles.textBurstiness)((s, dir) => {
       // Church–Gale burstiness per term: mean occurrences per
       // CONTAINING doc (cf·10⁶ div df) for the top corpus terms —
       // separates topical words (bursty) from function words (flat)
@@ -2772,7 +2798,7 @@ object SparkEntry {
         .select(col("term"), col("df"), col("cf"),
           expr("cf * 1000000 div df").as("burst_ppm"))
     }),
-    "sample_balance" -> ((s, dir) => {
+    "sample_balance" -> Q(Oracles.sampleBalance)((s, dir) => {
       // class-balanced downsample: every lang keeps exactly the
       // minority-class count of docs, chosen by salted hash rank —
       // deterministic, no RNG, no global sort (per-class windows)
@@ -2787,21 +2813,21 @@ object SparkEntry {
         .where(col("__rk") <= col("k"))
         .select(col("doc_id"), col("lang"))
     }),
-    "text_boilerplate" -> ((s, dir) =>
+    "text_boilerplate" -> Q(Oracles.textBoilerplate)((s, dir) =>
       // cross-doc line-frequency census: the text that survives
       // page-level dedup because each page differs elsewhere
       TextOps.boilerplate(t(s, dir, "documents"), "doc_id", "text",
         LineTokens, BoilerMinDocs)),
-    "text_keyphrases" -> ((s, dir) =>
+    "text_keyphrases" -> Q(Oracles.textKeyphrases)((s, dir) =>
       // per-doc top-k bigrams by corpus PMI over a hapax floor
       TextOps.keyphrases(t(s, dir, "documents"), "doc_id", "text",
         KeyphraseK, KeyphraseMinCount)),
-    "text_nb_classify" -> ((s, dir) =>
+    "text_nb_classify" -> Q(Oracles.textNbClassify)((s, dir) =>
       // Laplace-smoothed multinomial NB over the labeled lang column,
       // trained + resubstitution-scored in one plan; micro-nat integer
       // scores keep the argmax engine-exact
       TextOps.naiveBayes(t(s, dir, "documents"), "doc_id", "text", "lang")),
-    "text_encoding_audit" -> ((s, dir) =>
+    "text_encoding_audit" -> Q(Oracles.textEncodingAudit)((s, dir) =>
       // per-source encoding health; deterministic corruption (U+FFFD on
       // doc_id≡0 mod 7, BEL on ≡0 mod 11) is injected query-side so the
       // audit has real positives to flag — the text_nfc synthesis pattern
@@ -2812,10 +2838,10 @@ object SparkEntry {
           when(col("doc_id") % EncCtrlMod === 0, lit("\u0007"))
             .otherwise(lit("")))),
         col("source"), col("t"))),
-    "text_fingerprint" -> ((s, dir) =>
+    "text_fingerprint" -> Q(Oracles.textFingerprint)((s, dir) =>
       t(s, dir, "documents").select(col("doc_id"),
         T.fingerprint(col("text")).as("fp"), T.rollingHash(col("text")).as("roll"))),
-    "text_nfc" -> ((s, dir) => {
+    "text_nfc" -> Q(Oracles.textNfc)((s, dir) => {
       // Unicode canonicalization through the native graft_nfc expression:
       // a decomposed variant of each doc (every 'e' + combining acute
       // U+0301) must compose back byte-identical to the precomposed 'é'
@@ -2829,54 +2855,54 @@ object SparkEntry {
         (T.nfc(col("decomp")) === expr("replace(text, 'e', '\u00e9')"))
           .as("composed_ok"))
     }),
-    "text_winnow" -> ((s, dir) =>
+    "text_winnow" -> Q(Oracles.textWinnow)((s, dir) =>
       // winnowing (MOSS) fingerprint selection: positional substring-run
       // detection at ~2/(w+1) the gram density
       TextOps.winnow(t(s, dir, "documents"), "doc_id", "text", WinK, WinW, WinSalt)),
-    "text_bpe_train" -> ((s, dir) =>
+    "text_bpe_train" -> Q(Oracles.textBpeTrain)((s, dir) =>
       // BPE tokenizer training: the merge table after BpeMerges rounds
       TextOps.bpeTrain(t(s, dir, "documents"), "text", BpeMerges)._1),
-    "text_bpe_vocab" -> ((s, dir) =>
+    "text_bpe_vocab" -> Q(Oracles.textBpeVocab)((s, dir) =>
       // the trained vocabulary: frequency-weighted symbol histogram of
       // the post-merge state
       TextOps.bpeTrain(t(s, dir, "documents"), "text", BpeMerges)._2
         .select(col("freq"), explode(col("syms")).as("sym"))
         .groupBy(col("sym")).agg(sum(col("freq")).as("n"))),
-    "text_feature_hash" -> ((s, dir) =>
+    "text_feature_hash" -> Q(Oracles.textFeatureHash)((s, dir) =>
       // hashing-trick featurization: vocabulary-free stable feature ids,
       // sparse (doc, bucket, n) output
       TextOps.featureHash(t(s, dir, "documents"), "doc_id", "text",
         FeatureHashBuckets, FeatureHashSalt)),
-    "text_bigram_pred" -> ((s, dir) =>
+    "text_bigram_pred" -> Q(Oracles.textBigramPred)((s, dir) =>
       // LM-shaped fluency signal: mean P(next|prev) under the corpus
       // bigram model, exact integer ppm (no ln — portable)
       TextOps.bigramPredictability(t(s, dir, "documents"), "doc_id", "text")),
-    "text_pmi" -> ((s, dir) =>
+    "text_pmi" -> Q(Oracles.textPmi)((s, dir) =>
       // collocation detection: PMI over the top-N adjacent token pairs
       TextOps.pmiBigrams(t(s, dir, "documents"), "text", PmiTopN)),
-    "text_bm25" -> ((s, dir) =>
+    "text_bm25" -> Q(Oracles.textBm25)((s, dir) =>
       // BM25 retrieval: top-k corpus docs per query doc, exact-integer
       // Okapi scoring (inverted-index aggregates + one term-keyed join)
       TextOps.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
         Bm25QueryMod, Bm25K)),
-    "text_phrase_search" -> ((s, dir) =>
+    "text_phrase_search" -> Q(Oracles.textPhraseSearch)((s, dir) =>
       // positional-postings phrase match: docs containing the phrase
       // contiguously, postings pruned to the phrase terms up front
       TextOps.phraseSearch(t(s, dir, "documents"), "doc_id", "text",
         PhraseQuery)),
-    "text_gopher_rules" -> ((s, dir) =>
+    "text_gopher_rules" -> Q(Oracles.textGopherRules)((s, dir) =>
       // published Gopher quality battery in exact integers: evidence
       // columns + per-rule flags + composite gate, all map-side
       TextOps.gopherRules(t(s, dir, "documents"), "doc_id", "text",
         GopherMinWords, GopherMaxWords, GopherMinMeanLenX100,
         GopherMaxMeanLenX100, GopherStopwords, GopherMinStop,
         GopherMinAlphaPpm)),
-    "text_jaccard_topk" -> ((s, dir) =>
+    "text_jaccard_topk" -> Q(Oracles.textJaccardTopk)((s, dir) =>
       // set-overlap retrieval: exact shingle-Jaccard top-k through the
       // inverted shingle index (sparse candidates, integer ppm)
       TextOps.jaccardTopK(t(s, dir, "documents"), "doc_id", "text",
         Bm25QueryMod, Bm25K)),
-    "text_rrf_fuse" -> ((s, dir) => {
+    "text_rrf_fuse" -> Q(Oracles.textRrfFuse)((s, dir) => {
       // hybrid retrieval: reciprocal-rank fusion of the lexical (BM25)
       // and set-overlap (Jaccard) rankings — rank-only, exact integers.
       // Both rankers are EXACT (no champion cap), so the query set is
@@ -2892,7 +2918,7 @@ object SparkEntry {
           queryBudget = AuditQueryBudget)),
         Bm25K, RrfC)
     }),
-    "text_jaccard_champion" -> ((s, dir) => {
+    "text_jaccard_champion" -> Q(Oracles.textJaccardChampion)((s, dir) => {
       // bounded-work shingle-Jaccard: champion cap (sz asc = the exact
       // per-shingle impact order) for candidate generation + exact
       // full-set intersection rescore; M derived from corpus size by
@@ -2909,7 +2935,7 @@ object SparkEntry {
         Bm25QueryMod, Bm25K, champM = jaccardChampM(docs.count()),
         queryBudget = AuditQueryBudget)
     }),
-    "text_jaccard_champ_recall" -> ((s, dir) => {
+    "text_jaccard_champ_recall" -> Q(Oracles.textJaccardChampRecall)((s, dir) => {
       // recall@k of the champion Jaccard ranking vs the exact one
       val docs = t(s, dir, "documents")
       // one shingle build for both rankings (r15: the two jaccardTopK
@@ -2924,7 +2950,7 @@ object SparkEntry {
           // so the binding work gate degrades to the advisory line
           overrideWork = true, digests = sh))
     }),
-    "text_bm25_champion" -> ((s, dir) => {
+    "text_bm25_champion" -> Q(Oracles.textBm25Champion)((s, dir) => {
       // bounded-work BM25: champion-list posting cap (impact-ordered
       // top-M docs per term) — query-time candidates ≤ |qterms|·M, the
       // linear-scale twin of the exact text_bm25 path; M derived from
@@ -2939,7 +2965,7 @@ object SparkEntry {
         Bm25QueryMod, Bm25K, champM = bm25ChampM(docs.count()),
         queryBudget = AuditQueryBudget)
     }),
-    "text_bm25_champ_recall" -> ((s, dir) => {
+    "text_bm25_champ_recall" -> Q(Oracles.textBm25ChampRecall)((s, dir) => {
       // what the champion cap costs: per-query recall@k of the champion
       // ranking against the exact BM25 top-k (integer ppm; mean + min)
       // exact half budgeted to the fixed hash-order query sample (the
@@ -2956,7 +2982,7 @@ object SparkEntry {
           overrideWork = true, // declared audit (see text_jaccard_champ_recall)
           index = idx))
     }),
-    "text_champ_recall_floor" -> ((s, dir) => {
+    "text_champ_recall_floor" -> Q(Oracles.textChampRecallFloor)((s, dir) => {
       // the champion recall FLOOR as a BINDING driver gate (the
       // q_approx_distinct certification pattern): Spark computes the
       // audit recall AND the meets_floor flag from the derived M; the
@@ -2978,7 +3004,7 @@ object SparkEntry {
           col("min_recall_ppm"),
           (col("min_recall_ppm") >= ChampRecallFloorPpm).as("meets_floor"))
     }),
-    "text_jaccard_recall_floor" -> ((s, dir) => {
+    "text_jaccard_recall_floor" -> Q(Oracles.textJaccardRecallFloor)((s, dir) => {
       // the Jaccard champion's recall floor as a BINDING driver gate —
       // the text_champ_recall_floor pattern on the set-overlap ranking.
       // The r14 sweeps PROVED the BM25-by-analogy M broken (min recall
@@ -3001,7 +3027,7 @@ object SparkEntry {
           col("min_recall_ppm"),
           (col("min_recall_ppm") >= ChampRecallFloorPpm).as("meets_floor"))
     }),
-    "text_jaccard_lsh_topk" -> ((s, dir) =>
+    "text_jaccard_lsh_topk" -> Q(Oracles.textJaccardLshTopk)((s, dir) =>
       // the ASYMPTOTIC Jaccard retrieval path (VERDICT r14 #1): MinHash
       // band buckets (recall-tuned scheme, Params.LshTopk*) probed per
       // query, exact full-set rescore of bucket candidates, threshold
@@ -3011,7 +3037,7 @@ object SparkEntry {
       TextOps.jaccardLshTopK(t(s, dir, "documents"), "doc_id", "text",
         Bm25QueryMod, Bm25K, LshTopkMinJacPpm, LshTopkK, LshTopkBands,
         queryBudget = AuditQueryBudget)),
-    "text_jaccard_lsh_recall" -> ((s, dir) => {
+    "text_jaccard_lsh_recall" -> Q(Oracles.textJaccardLshRecall)((s, dir) => {
       // what the band bucketing costs vs the exact THRESHOLDED truth
       // (the exact top-k restricted to jac_ppm ≥ τ — the near-dup
       // retrieval contract; sub-τ tail misses are the design, not a
@@ -3027,7 +3053,7 @@ object SparkEntry {
           Bm25K, LshTopkMinJacPpm, LshTopkK, LshTopkBands,
           queryBudget = AuditQueryBudget, digests = sh))
     }),
-    "text_jaccard_lsh_floor" -> ((s, dir) => {
+    "text_jaccard_lsh_floor" -> Q(Oracles.textJaccardLshFloor)((s, dir) => {
       // the LSH retrieval recall floor as a BINDING driver gate (the
       // text_jaccard_recall_floor pattern): Spark computes the audit
       // recall AND the meets_floor flag; the twin recomputes the recall
@@ -3050,7 +3076,7 @@ object SparkEntry {
           col("min_recall_ppm"),
           (col("min_recall_ppm") >= JaccardLshRecallFloorPpm).as("meets_floor"))
     }),
-    "text_jaccard_prefix_topk" -> ((s, dir) =>
+    "text_jaccard_prefix_topk" -> Q(Oracles.textJaccardPrefixTopk)((s, dir) =>
       // the EXACT mid-τ retrieval path (r15): PPJoin prefix-filter
       // candidates touching the budgeted queries, verified on full
       // rank-encoded sets, per-query top-k at the 0.5 design τ —
@@ -3061,20 +3087,20 @@ object SparkEntry {
       TextOps.jaccardPrefixTopK(t(s, dir, "documents"), "doc_id", "text",
         Bm25QueryMod, Bm25K, JaccardMinNum, JaccardMinDen,
         queryBudget = AuditQueryBudget)),
-    "text_novelty" -> ((s, dir) =>
+    "text_novelty" -> Q(Oracles.textNovelty)((s, dir) =>
       // per-doc share of shingles first seen in THIS doc — the
       // streaming-ingest novelty/re-crawl smell, digest-keyed
       TextOps.noveltyPerDoc(t(s, dir, "documents"), "doc_id", "text")),
-    "text_heaps" -> ((s, dir) =>
+    "text_heaps" -> Q(Oracles.textHeaps)((s, dir) =>
       // vocabulary-growth curve at fixed corpus prefixes — one pass via
       // term-first-document, no per-checkpoint count-distinct
       TextOps.heapsLaw(t(s, dir, "documents"), "doc_id", "text",
         HeapsCutPcts)),
-    "text_zipf" -> ((s, dir) =>
+    "text_zipf" -> Q(Oracles.textZipf)((s, dir) =>
       // rank-frequency power-law fit over the top vocabulary: OLS on
       // per-rank-rounded integer lns, exact moments, truncating ratios
       TextOps.zipfFit(t(s, dir, "documents"), "text", ZipfTopN)),
-    "text_rank_metrics" -> ((s, dir) => {
+    "text_rank_metrics" -> Q(Oracles.textRankMetrics)((s, dir) => {
       // retrieval evaluation: score the BM25 ranking against the exact
       // shingle-Jaccard top-k as the relevance set — P@k, R@k, MRR, AP,
       // nDCG per query, all exact integers (per-rank discounts floored
@@ -3091,13 +3117,13 @@ object SparkEntry {
           .select(col("query_id"), col("doc_id")),
         Bm25K)
     }),
-    "text_bpe_encode" -> ((s, dir) => {
+    "text_bpe_encode" -> Q(Oracles.textBpeEncode)((s, dir) => {
       // tokenize the corpus with the trained BPE: per-doc encoded length
       val docs = t(s, dir, "documents")
       TextOps.bpeEncodedLength(docs, "doc_id", "text",
         TextOps.bpeTrain(docs, "text", BpeMerges)._2)
     }),
-    "text_pack" -> ((s, dir) => {
+    "text_pack" -> Q(Oracles.textPack)((s, dir) => {
       // pretraining sequence packing: concatenate docs in doc_id order,
       // cut fixed windows of PackChunkTokens — each doc maps to the
       // chunk range its global token interval [cum−n, cum) straddles.
@@ -3118,118 +3144,118 @@ object SparkEntry {
     }),
 
     // ---- §2.6 events ----
-    "events_window_agg" -> ((s, dir) =>
+    "events_window_agg" -> Q(Oracles.eventsWindowAgg)((s, dir) =>
       EventOps.hourlyAgg(t(s, dir, "events"), "ts", "event_type", "value")),
-    "events_sliding_window" -> ((s, dir) =>
+    "events_sliding_window" -> Q(Oracles.eventsSlidingWindow)((s, dir) =>
       // hopping 1h windows every 15min — each event counted in exactly
       // size/hop windows via integer epoch arithmetic
       EventOps.slidingCounts(t(s, dir, "events"), "ts", "event_type",
         SlideSizeMs, SlideHopMs)),
-    "events_sessionize" -> ((s, dir) =>
+    "events_sessionize" -> Q(Oracles.eventsSessionize)((s, dir) =>
       EventOps.sessionize(t(s, dir, "events"), "user_id", "ts", SessionGapMs)),
-    "stream_sessionize_replay" -> ((s, dir) =>
+    "stream_sessionize_replay" -> Q(Oracles.streamSessionizeReplay)((s, dir) =>
       // the STREAMING sessionizer (fMGWS + event-time timeout) run to
       // completion on the static table via Trigger.AvailableNow and
       // sentinel-advanced watermark — its FINAL table must equal the
       // batch twin's sessions (driver-oracle'd; VERDICT r7 task #4)
       graft.streaming.StreamRun.sessionizeReplay(s, dir, SessionGapMs)),
-    "stream_dedupe_replay" -> ((s, dir) =>
+    "stream_dedupe_replay" -> Q(Oracles.streamDedupeReplay)((s, dir) =>
       // the STREAMING watermark-bounded dedup fed every event TWICE in
       // two micro-batches; final table must be exactly one row per id
       graft.streaming.StreamRun.dedupeReplay(s, dir)),
-    "stream_window_agg_replay" -> ((s, dir) =>
+    "stream_window_agg_replay" -> Q(Oracles.streamWindowAggReplay)((s, dir) =>
       // the STREAMING watermarked 1h tumbling aggregate run to
       // completion (sentinel-advanced watermark flushes every window);
       // final table must equal the batch GROUP BY twin
       graft.streaming.StreamRun.windowAggReplay(s, dir)),
-    "stream_join_replay" -> ((s, dir) =>
+    "stream_join_replay" -> Q(Oracles.streamJoinReplay(inner = true))((s, dir) =>
       // the STREAMING stream-stream interval join (inner) run to
       // completion; matches emit in-batch, final table must equal the
       // batch interval-join twin
       graft.streaming.StreamRun.joinReplay(s, dir)),
-    "stream_left_join_replay" -> ((s, dir) =>
+    "stream_left_join_replay" -> Q(Oracles.streamJoinReplay(inner = false))((s, dir) =>
       // the STREAMING LEFT-OUTER stream-stream join run to completion —
       // including the null-row-at-eviction path: two two-sided sentinel
       // files advance both watermarks then give eviction a batch to
       // fire in; final table must equal the batch LEFT JOIN twin
       graft.streaming.StreamRun.leftJoinReplay(s, dir)),
-    "stream_idempotent_sink_replay" -> ((s, dir) =>
+    "stream_idempotent_sink_replay" -> Q(Oracles.streamIdempotentSinkReplay)((s, dir) =>
       // merge-on-read idempotent sink run to completion: every batch
       // APPENDED verbatim (the table is staged twice = a redelivery,
       // and the replay asserts the sink holds both copies), read-side
       // key dedup restores exactly-once; must equal the events table
       graft.streaming.StreamRun.idempotentSinkReplay(s, dir)),
-    "stream_enrich_replay" -> ((s, dir) =>
+    "stream_enrich_replay" -> Q(Oracles.streamEnrichReplay)((s, dir) =>
       // stream-static enrichment run to completion (broadcast dim per
       // micro-batch, stateless; dim = event-type domain minus 'error'
       // so both match and null-row paths carry data); final table must
       // equal the batch LEFT JOIN twin
       graft.streaming.StreamRun.enrichReplay(s, dir)),
-    "stream_topk_replay" -> ((s, dir) =>
+    "stream_topk_replay" -> Q(Oracles.streamTopkReplay)((s, dir) =>
       // the custom TopK Aggregator inside a streaming aggregation run
       // to completion over TWO parity-split micro-batches (cross-batch
       // buffer MERGE exercised); final per-type top-K must equal the
       // batch window twin
       graft.streaming.StreamRun.topkReplay(s, dir, TopNPerGroup)),
-    "stream_cdc_replay" -> ((s, dir) =>
+    "stream_cdc_replay" -> Q(Oracles.streamCdcReplay)((s, dir) =>
       // the STREAMING CDC ingestion loop (foreachBatch folds each
       // micro-batch into the snapshot via cdcApply) run to completion
       // over a three-seq change log staged as seq-ordered files; the
       // final snapshot must equal one global latest-op-wins fold
       graft.streaming.StreamRun.cdcReplay(s, dir)),
-    "stream_kll_replay" -> ((s, dir) =>
+    "stream_kll_replay" -> Q(Oracles.qKllQuantiles)((s, dir) =>
       // the STREAMING bottom-k quantile sketch run to completion over
       // two parity micro-batches (cross-batch state MERGE exercised);
       // exact mergeable state ⇒ final estimates must equal the batch
       // q_kll_quantiles (shared oracle)
       graft.streaming.StreamRun.kllReplay(s, dir)),
-    "stream_kmv_replay" -> ((s, dir) =>
+    "stream_kmv_replay" -> Q(Oracles.qKmvDistinct)((s, dir) =>
       // the STREAMING KMV distinct sketch run to completion over two
       // parity micro-batches; final estimate must equal the batch
       // q_kmv_distinct (shared oracle)
       graft.streaming.StreamRun.kmvReplay(s, dir)),
-    "stream_heavy_hitters_replay" -> ((s, dir) =>
+    "stream_heavy_hitters_replay" -> Q(Oracles.qHeavyHitters)((s, dir) =>
       // the STREAMING Misra-Gries candidate summary run to completion
       // (two micro-batches, cross-batch counter fold), then the
       // documented exact-verify batch pass over the same corpus; the
       // per-shard retention guarantee makes the verified set equal the
       // batch q_heavy_hitters (shared oracle)
       graft.streaming.StreamRun.heavyHittersReplay(s, dir)),
-    "stream_minhash_replay" -> ((s, dir) =>
+    "stream_minhash_replay" -> Q(Oracles.streamMinhashReplay)((s, dir) =>
       // the STREAMING MinHash-LSH first-claimant detector run to
       // completion over two id-ordered micro-batches; candidates must
       // equal the per-band (min doc, later doc) twin
       graft.streaming.StreamRun.minhashReplay(s, dir)),
-    "stream_drift_replay" -> ((s, dir) =>
+    "stream_drift_replay" -> Q(Oracles.streamDriftReplay)((s, dir) =>
       // the STREAMING chi-squared ingestion guard run to completion:
       // each parity micro-batch scored independently against the static
       // pre-split reference; per-batch pooled stats vs the twin
       graft.streaming.StreamRun.driftReplay(s, dir)),
-    "stream_zscore_replay" -> ((s, dir) =>
+    "stream_zscore_replay" -> Q(Oracles.eventsZscoreAlerts)((s, dir) =>
       // the STREAMING exact-integer z-score alert detector run to
       // completion over two time-split micro-batches (cross-batch state
       // fold, global per-key order preserved); alert set must equal the
       // batch events_zscore_alerts (shared oracle)
       graft.streaming.StreamRun.zscoreReplay(s, dir)),
-    "stream_restart_replay" -> ((s, dir) =>
+    "stream_restart_replay" -> Q(Oracles.streamRestartReplay)((s, dir) =>
       // checkpoint-restart recovery as a hash gate: half the backlog
       // drains, the query stops, the rest lands, a second query resumes
       // on the SAME checkpoint — recovered state + exactly-once file
       // offsets or the final per-type aggregate hash-fails the twin
       graft.streaming.StreamRun.restartReplay(s, dir)),
-    "stream_throttle_replay" -> ((s, dir) =>
+    "stream_throttle_replay" -> Q(Oracles.streamThrottleReplay)((s, dir) =>
       // the STREAMING per-key cooldown throttle run to completion over
       // two time-split micro-batches (cross-batch last-passed anchors);
       // passed set must equal the batch per-key recurrence twin
       graft.streaming.StreamRun.throttleReplay(s, dir, ThrottleCooldownMs)),
-    "stream_latedrop_replay" -> ((s, dir) =>
+    "stream_latedrop_replay" -> Q(Oracles.streamLateDropReplay)((s, dir) =>
       // watermark late-drop observability as a HASH gate (§2.6 row 33n,
       // VERDICT r14 #7): a sentinel advances the watermark past every
       // real timestamp, a deliberately late frame follows, and the
       // windowed aggregation must drop AND COUNT exactly those rows —
       // the twin recomputes the staged-late count and asserts equality
       graft.streaming.StreamRun.lateDropReplay(s, dir)),
-    "events_sessionize_typed" -> ((s, dir) => {
+    "events_sessionize_typed" -> Q(Oracles.eventsSessionize)((s, dir) => {
       // the SAME sessions through the typed Dataset[Event] surface —
       // flatMapGroups closure instead of analytic windows; shares the
       // untyped query's oracle, so typed-API parity is driver-checked
@@ -3238,49 +3264,49 @@ object SparkEntry {
         t(s, dir, "events").as[graft.streaming.EventStreams.Event],
         SessionGapMs)
     }),
-    "q_sliding_distinct" -> ((s, dir) =>
+    "q_sliding_distinct" -> Q(Oracles.qSlidingDistinct)((s, dir) =>
       // rolling 7-day distinct users (WAU), exact — ×7 window explode
       EventOps.slidingDistinct(t(s, dir, "events"),
         expr("unix_millis(ts) div 86400000"), col("user_id"),
         SlidingWindowDays)),
-    "q_kmv_sliding" -> ((s, dir) =>
+    "q_kmv_sliding" -> Q(Oracles.qKmvSliding)((s, dir) =>
       // same rolling windows from per-day KMV sketch state — the
       // bounded-state form: facts shuffle once into day sketches, each
       // window merges 7 arrays of 64 longs
       Sketches.kmvSlidingDistinct(t(s, dir, "events"),
         expr("unix_millis(ts) div 86400000"), col("user_id"),
         SlidingWindowDays, KmvK, KmvSalt)),
-    "q_kll_sliding" -> ((s, dir) =>
+    "q_kll_sliding" -> Q(Oracles.qKllSliding)((s, dir) =>
       // rolling 7-day value percentiles from per-day quantile-sketch
       // state — the bounded-state rolling p50/p95 ops metric
       operators.QuantileSketch.slidingQuantiles(t(s, dir, "events"),
         expr("unix_millis(ts) div 86400000"), col("event_id"),
         cents(col("value")), SlidingWindowDays, KllK, KllSalt, KllPs)),
-    "events_extract" -> ((s, dir) =>
+    "events_extract" -> Q(Oracles.eventsExtract)((s, dir) =>
       EventOps.extractIntField(t(s, dir, "events"), "props", "k")
         .select(col("event_id"), col("k"))),
-    "events_json_parse" -> ((s, dir) =>
+    "events_json_parse" -> Q(Oracles.eventsJsonParse)((s, dir) =>
       // structured JSON parse (codegen'd Jackson) — the robust form of
       // the regex extraction above for nested/typed payloads
       t(s, dir, "events").select(col("event_id"),
         from_json(col("props"), "k LONG", java.util.Map.of[String, String]())
           .getField("k").as("k"))),
-    "events_bursts" -> ((s, dir) =>
+    "events_bursts" -> Q(Oracles.eventsBursts)((s, dir) =>
       // alerting: hours where a type's count doubles its trailing
       // observed-hour baseline, integer cross-multiplied
       EventOps.bursts(t(s, dir, "events"), "event_type", "ts",
         BurstTrailHours, BurstK, BurstMinTrail)),
-    "events_attribution" -> ((s, dir) =>
+    "events_attribution" -> Q(Oracles.eventsAttribution)((s, dir) =>
       // linear multi-touch: clicks in the 30min window before a purchase
       // split its credit equally, exact integer ppm
       EventOps.attribution(t(s, dir, "events"), "user_id", "ts", "event_type",
         AsofTarget, AsofMatch, SessionGapMs)),
-    "events_attribution_ushaped" -> ((s, dir) =>
+    "events_attribution_ushaped" -> Q(Oracles.eventsAttributionUShaped)((s, dir) =>
       // 40/20/40 position-based credit: first + last touch anchor,
       // middles split exactly (deterministic truncated shares)
       EventOps.attributionUShaped(t(s, dir, "events"), "user_id", "ts",
         "event_type", AsofTarget, AsofMatch, SessionGapMs)),
-    "etl_fk_audit" -> ((s, dir) => {
+    "etl_fk_audit" -> Q(Oracles.etlFkAudit)((s, dir) => {
       // referential-integrity census over the star, plus one
       // deliberately-broken demo relation (parent limited to even part
       // keys) so orphan accounting is exercised, not just asserted zero
@@ -3294,18 +3320,18 @@ object SparkEntry {
         ("lineitem.l_partkey->part_even", li, col("l_partkey"),
           t(s, dir, "part").where(col("p_partkey") % 2 === 0), col("p_partkey"))))
     }),
-    "q_lift_table" -> ((s, dir) =>
+    "q_lift_table" -> Q(Oracles.qLiftTable)((s, dir) =>
       // decile lift/PR of the quality score against a token label: does
       // the top decile concentrate the docs that mention the token
       Quality.liftTable(t(s, dir, "documents"),
         round(T.qualityScore(col("text")) * 10000).cast("long"),
         array_contains(T.tokens(col("text")), LiftLabelToken),
         col("doc_id"), LiftBuckets)),
-    "events_paths" -> ((s, dir) =>
+    "events_paths" -> Q(Oracles.eventsPaths)((s, dir) =>
       // top pre-purchase event-type journeys inside the session window
       EventOps.conversionPaths(t(s, dir, "events"), "user_id", "ts",
         "event_type", AsofTarget, SessionGapMs, PathTopK)),
-    "events_growth" -> ((s, dir) => {
+    "events_growth" -> Q(Oracles.eventsGrowth)((s, dir) => {
       // audience growth curve: per week the first-seen users and the
       // running total of uniques to date — the week table is bounded,
       // so the cumulative window is the histogramQuantiles idiom
@@ -3319,54 +3345,54 @@ object SparkEntry {
           Window.partitionBy(lit(0)).orderBy(col("wk").asc)
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     }),
-    "events_stickiness" -> ((s, dir) =>
+    "events_stickiness" -> Q(Oracles.eventsStickiness)((s, dir) =>
       // DAU/WAU/MAU engagement census with the DAU/MAU ratio — three
       // trailing windows out of one offset explode + one aggregate
       EventOps.stickiness(t(s, dir, "events"), "user_id", "ts",
         StickyWauDays, StickyMauDays)),
-    "events_rfm" -> ((s, dir) =>
+    "events_rfm" -> Q(Oracles.eventsRfm)((s, dir) =>
       // recency/frequency/monetary quintile segmentation — boundaries
       // are exact equi-depth ranks via GlobalRank, never a global ntile
       EventOps.rfm(t(s, dir, "events"), "user_id", "ts", "value")),
-    "events_attribution_decay" -> ((s, dir) =>
+    "events_attribution_decay" -> Q(Oracles.eventsAttributionDecay)((s, dir) =>
       // recency-weighted multi-touch: credit halves per 5 min of age,
       // exact power-of-two ladder — the e^-λt that hash-matches
       EventOps.attributionDecay(t(s, dir, "events"), "user_id", "ts",
         "event_type", AsofTarget, AsofMatch, SessionGapMs, AttrHalflifeMs)),
-    "events_pivot" -> ((s, dir) =>
+    "events_pivot" -> Q(Oracles.eventsPivot)((s, dir) =>
       EventOps.dailyPivot(t(s, dir, "events"), "ts", "event_type", EventTypes)),
-    "events_asof" -> ((s, dir) =>
+    "events_asof" -> Q(Oracles.eventsAsof)((s, dir) =>
       EventOps.asofPriorEvent(t(s, dir, "events"), "user_id", "ts", "event_type",
         AsofTarget, AsofMatch)),
-    "events_nearest" -> ((s, dir) =>
+    "events_nearest" -> Q(Oracles.eventsNearest)((s, dir) =>
       // nearest click to each purchase in EITHER direction — two frame
       // scans on one per-user sort, ties to the prior event
       EventOps.nearestEvent(t(s, dir, "events"), "user_id", "ts", "event_type",
         AsofTarget, AsofMatch)),
-    "events_attribution_markov" -> ((s, dir) =>
+    "events_attribution_markov" -> Q(Oracles.eventsMarkov)((s, dir) =>
       // removal-effect attribution: first-order session chain absorbed
       // at the first purchase; channel credit = conversion-probability
       // drop when the channel is removed (ppm fixed-point iteration)
       EventOps.markovAttribution(t(s, dir, "events"), "user_id", "ts",
         "event_type", SessionGapMs, MarkovConv, MarkovChannels, MarkovSteps)),
-    "events_transitions" -> ((s, dir) =>
+    "events_transitions" -> Q(Oracles.eventsTransitions)((s, dir) =>
       // within-session Markov transition counts — one user-keyed window
       // pass, no session ids materialized
       EventOps.transitionMatrix(t(s, dir, "events"), "user_id", "ts", "event_type",
         SessionGapMs)),
-    "events_funnel" -> ((s, dir) =>
+    "events_funnel" -> Q(Oracles.eventsFunnel)((s, dir) =>
       // compare step times in epoch-ms (the events table's portable
       // granularity — raw ns/us timestamps truncate differently per engine)
       EventOps.funnel(t(s, dir, "events").withColumn("ts_ms", unix_millis(col("ts"))),
         "user_id", "ts_ms", "event_type", FunnelSteps)),
-    "events_funnel_latency" -> ((s, dir) =>
+    "events_funnel_latency" -> Q(Oracles.eventsFunnelLatency)((s, dir) =>
       // click→…→purchase wall time for full-funnel completers, exact
       // ms quartiles via the range-partitioned rank (no global window)
       EventOps.funnelLatency(t(s, dir, "events"), "user_id", "ts",
         "event_type", FunnelSteps)),
 
     // ---- §2.7 multimodal ----
-    "multimodal_features" -> ((s, dir) => {
+    "multimodal_features" -> Q(Oracles.multimodalFeatures)((s, dir) => {
       // binary columns + typed metadata through the REAL codecs: mixed
       // PNG/WAV/GIF payloads, decode on the executor, per-media
       // features. Hash-checked (r10): the twin compares against an
@@ -3378,7 +3404,7 @@ object SparkEntry {
       Multimodal.exportExpectedFeatures(docs, expFeatRoot(dir))
       Multimodal.featuresFromDocuments(s, docs)
     }),
-    "src_binaryfile_ingest" -> ((s, dir) => {
+    "src_binaryfile_ingest" -> Q(Oracles.srcBinaryfileIngest)((s, dir) => {
       // raw multimodal ingestion: materialize a deterministic PNG file
       // tree once (executor-side, idempotent) and read it back through
       // Spark's binaryFile source — path/length metadata from the
@@ -3403,7 +3429,7 @@ object SparkEntry {
           (id, n, w, h)
         }.toDF("media_id", "n_bytes", "width", "height")
     }),
-    "multimodal_cdc_chunks" -> ((s, dir) => {
+    "multimodal_cdc_chunks" -> Q(Oracles.multimodalCdcChunks)((s, dir) => {
       // chunk-level dedup census over real binary payloads (PNG/WAV/
       // GIF): content-defined boundaries → content-key groupBy — how
       // much payload mass dedups away without any pairwise byte
@@ -3430,7 +3456,7 @@ object SparkEntry {
           countDistinct(col("media_id")).as("n_media"),
           max(col("length")).as("chunk_bytes"))
     }),
-    "multimodal_resize" -> ((s, dir) => {
+    "multimodal_resize" -> Q(Oracles.multimodalResize)((s, dir) => {
       // REAL image resize, oracle-gated (r13, VERDICT r12 #5): PNG
       // renders → ImageIO decode → DEFINED floor-NN rescale → PNG
       // re-encode → ImageIO decode of the RESIZED payload; the twin
@@ -3450,7 +3476,7 @@ object SparkEntry {
           (r.media_id, w, h, crc)
         }.toDF("media_id", "width", "height", "pix_crc")
     }),
-    "multimodal_frame_sample" -> ((s, dir) => {
+    "multimodal_frame_sample" -> Q(Oracles.multimodalFrameSample)((s, dir) => {
       // REAL GIF frame sampling, oracle-gated (r13, VERDICT r12 #5):
       // animated-GIF payloads → JVM demux → strided frames with decoded
       // dims + pixel crc; the twin reads the generation-side
@@ -3462,7 +3488,7 @@ object SparkEntry {
       Multimodal.frameSample(Multimodal.mediaFromDocumentsGif(docs),
         FrameSampleBytes, FrameSampleStride)
     }),
-    "multimodal_png_codec" -> ((s, dir) => {
+    "multimodal_png_codec" -> Q(Oracles.multimodalPngCodec)((s, dir) => {
       // §2.7 row 35 as a DIRECT driver gate (r14, VERDICT r13 #5):
       // every doc renders a PNG and the REAL ImageIO decode must
       // reproduce dims AND pixel crc against the generation-side
@@ -3479,7 +3505,7 @@ object SparkEntry {
         }
       }.toDF("media_id", "width", "height", "pix_crc", "decoded")
     }),
-    "multimodal_wav_codec" -> ((s, dir) => {
+    "multimodal_wav_codec" -> Q(Oracles.multimodalWavCodec)((s, dir) => {
       // §2.7 row 35c as a DIRECT driver gate (r14, VERDICT r13 #5):
       // every doc synthesizes PCM, RIFF-encodes, and the REAL
       // javax.sound decode must reproduce rate, sample count AND
@@ -3495,7 +3521,7 @@ object SparkEntry {
         }
       }.toDF("media_id", "sample_rate", "n_samples", "pcm_crc", "decoded")
     }),
-    "multimodal_image_neardup" -> ((s, dir) => {
+    "multimodal_image_neardup" -> Q(Oracles.multimodalImageNeardup)((s, dir) => {
       // image near-dup over real PNG decode: every doc renders with a
       // one-pixel-perturbed twin; aHash signatures feed the shared
       // Dedup.signaturePairs kernel (equal-signature clique collapse +
@@ -3511,7 +3537,7 @@ object SparkEntry {
         Multimodal.mediaFromDocumentsPngTwins(docs, 16, 12),
         Params.SimhashMaxDist)
     }),
-    "multimodal_image_neardup_diverse" -> ((s, dir) => {
+    "multimodal_image_neardup_diverse" -> Q(Oracles.multimodalImageNeardupDiverse)((s, dir) => {
       // the same decode→aHash→pair pipeline on the REALISTIC-DIVERSITY
       // renders (md5-raster per doc — a uniform draw of the aHash
       // space): the pair set is ~one twin pair per doc, OUTPUT-SPARSE
@@ -3523,377 +3549,5 @@ object SparkEntry {
         Multimodal.mediaFromDocumentsPngTwinsDiverse(docs, 16, 12),
         Params.SimhashMaxDist)
     }),
-  )
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Every query key has a twin (r12; HLL and
-    * union-find, the two historic rows-only entries, are now gated via
-    * a band assertion and a generated round replay). Omitted keys
-    * get the driver's weaker rows-only check.
-    */
-  def oracleSql: Map[String, String] = Map(
-    "src_binaryfile_ingest" -> Oracles.srcBinaryfileIngest,
-    "multimodal_features" -> Oracles.multimodalFeatures,
-    "multimodal_resize" -> Oracles.multimodalResize,
-    "multimodal_png_codec" -> Oracles.multimodalPngCodec,
-    "multimodal_wav_codec" -> Oracles.multimodalWavCodec,
-    "multimodal_frame_sample" -> Oracles.multimodalFrameSample,
-    "multimodal_image_neardup" -> Oracles.multimodalImageNeardup,
-    "multimodal_image_neardup_diverse" -> Oracles.multimodalImageNeardupDiverse,
-    "multimodal_cdc_chunks" -> Oracles.multimodalCdcChunks,
-    "src_csv_roundtrip" -> Oracles.srcCsvRoundtrip,
-    "src_jsonl_roundtrip" -> "SELECT doc_id, text, n_chars FROM documents",
-    "stage_clean" -> Oracles.stageClean,
-    "sink_compact" -> "SELECT event_type, CAST(count(*) AS BIGINT) AS n FROM events GROUP BY event_type",
-    "stage_dedup_key" -> Oracles.stageDedupKey,
-    "dim_distinct" -> Oracles.dimDistinct,
-    "dim_explode_bridge" -> Oracles.dimExplodeBridge,
-    "fact_join" -> Oracles.factJoin,
-    "mart_kpi_year" -> Oracles.martKpiYear,
-    "mart_top_per_group" -> Oracles.martTopPerGroup,
-    "mart_top_threshold" -> Oracles.martTopThreshold,
-    "mart_histogram" -> Oracles.martHistogram,
-    "sink_partitioned_write" -> Oracles.factJoin,
-    "imdb_pipeline" -> Oracles.imdbPipelineKpi,
-    "imdb_top_genre" -> Oracles.imdbTopGenre,
-    "q1_pricing_summary" -> Oracles.q1PricingSummary,
-    "q3_shipping_priority" -> Oracles.q3ShippingPriority,
-    "q5_local_supplier" -> Oracles.q5LocalSupplier,
-    "q_anti_join" -> Oracles.qAntiJoin,
-    "q_semi_join" -> Oracles.qSemiJoin,
-    "q_unpivot" -> Oracles.qUnpivot,
-    "q_moving_avg" -> Oracles.qMovingAvg,
-    "q_rolling_median" -> Oracles.qRollingMedian,
-    "q_ewma" -> Oracles.qEwma,
-    "q_holt" -> Oracles.qHolt,
-    "q_holt_winters" -> Oracles.qHoltWinters,
-    "q_drift_chi2" -> Oracles.qDriftChi2,
-    "q_jsd_drift" -> Oracles.qJsdDrift,
-    "q_entropy" -> Oracles.qEntropy,
-    "events_user_entropy" -> Oracles.eventsUserEntropy,
-    "q_random_walks" -> Oracles.qRandomWalks,
-    "q_ab_ttest" -> Oracles.qAbTtest,
-    "q_cuped" -> Oracles.qCuped,
-    "q_wilson_ci" -> Oracles.qWilsonCi,
-    "q_stratified_ate" -> Oracles.qStratifiedAte,
-    "q_did" -> Oracles.qDid,
-    "q_srm" -> Oracles.qSrm,
-    "q_woe_iv" -> Oracles.qWoeIv,
-    "q_calibration" -> Oracles.qCalibration,
-    "q_modularity" -> Oracles.qModularity,
-    "q_trend_fit" -> Oracles.qTrendFit,
-    "sample_temperature" -> Oracles.sampleTemperature,
-    "q_acf" -> Oracles.qAcf,
-    "q_seasonal" -> Oracles.qSeasonal,
-    "q_cusum" -> Oracles.qCusum,
-    "events_new_users" -> Oracles.eventsNewUsers,
-    "q_sliding_distinct" -> Oracles.qSlidingDistinct,
-    "q_kmv_sliding" -> Oracles.qKmvSliding,
-    "q_kll_sliding" -> Oracles.qKllSliding,
-    "q_ntile" -> Oracles.qNtile,
-    "q_rollup" -> Oracles.qRollup,
-    "q_grouping_sets" -> Oracles.qGroupingSets,
-    "q_cube" -> Oracles.qCube,
-    "q_median" -> Oracles.qMedian,
-    "q_mode" -> Oracles.qMode,
-    "q_weighted_median" -> Oracles.qWeightedMedian,
-    "q_string_agg" -> Oracles.qStringAgg,
-    "q_higher_moments" -> Oracles.qHigherMoments,
-    "events_concurrency" -> Oracles.eventsConcurrency,
-    "q_distinct_count" -> Oracles.qDistinctCount,
-    // the estimate is certified, not reproduced: the twin asserts the
-    // within-band flag TRUE next to the exact distinct, so HLL drift
-    // past the documented bound is a loud hash FAIL
-    "q_approx_distinct" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS yearkey,
-        |  CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_cust_exact,
-        |  TRUE AS est_within_band
-        |FROM orders GROUP BY 1""".stripMargin,
-    "q_running_total" -> Oracles.qRunningTotal,
-    "q_global_rank" -> Oracles.qGlobalRank,
-    "mart_top_salted" -> Oracles.martTopPerGroup,
-    "mart_top_agg" -> Oracles.martTopPerGroup,
-    "dedup_exact" -> "SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_dups FROM documents GROUP BY md5(text)",
-    "dedup_minhash_lsh" -> Oracles.dedupMinhashLsh,
-    "dedup_source_stats" -> "SELECT source, CAST(count(*) AS BIGINT) AS n_docs, CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_unique, CAST(1000000 * (count(*) - count(DISTINCT md5(text))) // count(*) AS BIGINT) AS dup_ppm FROM documents GROUP BY source",
-    "dedup_overlap_matrix" -> Oracles.dedupOverlapMatrix,
-    "dedup_minhash_n3" -> Oracles.dedupMinhashN3,
-    "dedup_ngram_jaccard" -> Oracles.dedupNgramJaccard,
-    "dedup_cluster" -> Oracles.dedupCluster,
-    "dedup_consensus" -> Oracles.dedupConsensus,
-    "text_curation_e2e" -> Oracles.textCurationE2e,
-    "text_pipeline" -> Oracles.textPipeline,
-    "dedup_simhash" -> Oracles.dedupSimhash,
-    "dedup_decontaminate" -> Oracles.dedupDecontaminate,
-    "dedup_incremental" -> Oracles.dedupIncremental,
-    "text_pii_scrub" -> Oracles.textPiiScrub,
-    "dedup_embedding" -> Oracles.dedupEmbedding,
-    "dedup_semantic" -> Oracles.dedupSemantic,
-    "ann_brute_topk" -> Oracles.annBruteTopK,
-    "ann_lsh_topk" -> Oracles.annLshTopK,
-    "ann_mrl_topk" -> Oracles.annMrlTopK,
-    "ann_ivf_topk" -> Oracles.annIvfTopK,
-    "ann_ivf_nprobe" -> Oracles.annIvfNprobe,
-    "ann_recall_eval" -> Oracles.annRecallEval,
-    "ann_ivf_trained" -> Oracles.annIvfTrained,
-    "emb_pq_codes" -> Oracles.embPqCodes,
-    "emb_sq8_codes" -> Oracles.embSq8Codes,
-    "emb_rand_proj" -> Oracles.embRandProj,
-    "q_join_size_est" -> Oracles.qJoinSizeEst,
-    "q_skew_audit" -> Oracles.qSkewAudit,
-    "q_compaction_plan" -> Oracles.qCompactionPlan,
-    "q_recursive_bom" -> Oracles.qRecursiveBom,
-    "emb_pq_adc" -> Oracles.embPqAdc,
-    "emb_ivf_pq_adc" -> Oracles.embIvfPqAdc,
-    "emb_kmeans_step" -> Oracles.embKmeansStep,
-    "emb_kmeans_train" -> Oracles.embKmeansTrain,
-    "q_range_join" -> Oracles.qRangeJoin,
-    "q_interval_coverage" -> Oracles.qIntervalCoverage,
-    "q_interval_join" -> Oracles.qIntervalJoin,
-    "q_salted_join" -> Oracles.qSaltedJoin,
-    "q_fuzzy_join" -> Oracles.qFuzzyJoin,
-    "q_spatial_join" -> Oracles.qSpatialJoin,
-    "q_spatial_sampled" -> Oracles.qSpatialSampled,
-    "q_dbscan_core" -> Oracles.qDbscanCore,
-    "q_dbscan_cluster" -> Oracles.qDbscanCluster,
-    "q_density_probe" -> Oracles.qDensityProbe,
-    "q_dbscan_capped" -> Oracles.qDbscanCapped,
-    "q_link_predict" -> Oracles.qLinkPredict,
-    "q_quartiles" -> Oracles.qQuartiles,
-    "q_gap_fill" -> Oracles.qGapFill,
-    "q_outliers" -> Oracles.qOutliers,
-    "etl_upsert" -> Oracles.etlUpsert,
-    "etl_ivm_join" -> Oracles.etlIvmJoin,
-    "etl_merge_full" -> Oracles.etlMergeFull,
-    "etl_forget" -> Oracles.etlForget,
-    "etl_cdc_apply" -> Oracles.etlCdcApply,
-    "etl_snapshot_diff" -> Oracles.etlSnapshotDiff,
-    "q_label_prop" -> Oracles.qLabelProp,
-    "q_louvain_move" -> Oracles.qLouvainMove,
-    "q_bfs_reach" -> Oracles.qBfsReach,
-    "q_harmonic" -> Oracles.qHarmonic,
-    "q_sssp" -> Oracles.qSssp,
-    "q_msf" -> Oracles.qMsf,
-    "q_kmv_distinct" -> Oracles.qKmvDistinct,
-    "q_kmv_union" -> Oracles.qKmvUnion,
-    "q_kll_quantiles" -> Oracles.qKllQuantiles,
-    "q_kll_union" -> Oracles.qKllUnion,
-    "q_corr_matrix" -> Oracles.qCorrMatrix,
-    "q_skipping_audit" -> Oracles.qSkippingAudit,
-    "sample_topk_weighted" -> Oracles.sampleTopkWeighted,
-    "q_dataset_fingerprint" -> Oracles.qDatasetFingerprint,
-    // the merge's oracle IS the full recompute — merged state must equal it
-    "q_fingerprint_merge" -> Oracles.qDatasetFingerprint,
-    "q_join_size_audit" -> Oracles.qJoinSizeAudit,
-    "q_equidepth_hist" -> Oracles.qEquidepthHist,
-    "q_benford" -> Oracles.qBenford,
-    "q_theilsen" -> Oracles.qTheilsen,
-    "sample_epoch_shuffle" -> Oracles.sampleEpochShuffle,
-    "q_kmv_intersect" -> Oracles.qKmvIntersect,
-    "q_kmv_diff" -> Oracles.qKmvDiff,
-    "er_resolve" -> Oracles.erResolve,
-    "etl_scd2" -> Oracles.etlScd2,
-    "etl_scd2_lookup" -> Oracles.etlScd2Lookup,
-    // the merge's oracle IS the full rebuild — incremental must equal it
-    "etl_scd2_merge" -> Oracles.etlScd2,
-    "sample_bernoulli" -> Oracles.sampleBernoulli,
-    "sample_split" -> Oracles.sampleSplit,
-    "sample_split_grouped" -> Oracles.sampleSplitGrouped,
-    "sample_mix_budget" -> Oracles.sampleMixBudget,
-    "sample_dsir" -> Oracles.sampleDsir,
-    "sample_stratified" -> Oracles.sampleStratified,
-    "sample_weighted" -> Oracles.sampleWeighted,
-    "sample_mixture" -> Oracles.sampleMixture,
-    "text_vocab" -> Oracles.textVocab,
-    "text_tfidf" -> Oracles.textTfidf,
-    "text_chunk" -> Oracles.textChunk,
-    "text_dedup_lines" -> Oracles.textDedupLines,
-    "text_oov" -> Oracles.textOov,
-    "dedup_keep_best" -> Oracles.dedupKeepBest,
-    "text_domain_stats" -> Oracles.textDomainStats,
-    "sample_ht_estimate" -> Oracles.sampleHtEstimate,
-    "text_url_dedup" -> Oracles.textUrlDedup,
-    "text_token_count" -> Oracles.textTokenCount,
-    "text_langid" -> Oracles.textLangId,
-    "text_quality" -> Oracles.textQuality,
-    "text_readability" -> Oracles.textReadability,
-    "text_nb_classify" -> Oracles.textNbClassify,
-    "text_boilerplate" -> Oracles.textBoilerplate,
-    "text_source_cover" -> Oracles.textSourceCover,
-    "dedup_threshold_sweep" -> Oracles.dedupThresholdSweep,
-    "dedup_lsh_recall" -> Oracles.dedupLshRecall,
-    "src_csv_badrecords" -> Oracles.srcCsvBadrecords,
-    "text_keyphrases" -> Oracles.textKeyphrases,
-    "text_script_mix" -> Oracles.textScriptMix,
-    "text_encoding_audit" -> Oracles.textEncodingAudit,
-    "text_fingerprint" -> Oracles.textFingerprint,
-    "text_nfc" -> Oracles.textNfc,
-    "text_winnow" -> Oracles.textWinnow,
-    "text_pack" -> Oracles.textPack,
-    "text_pmi" -> Oracles.textPmi,
-    "text_bigram_pred" -> Oracles.textBigramPred,
-    "text_feature_hash" -> Oracles.textFeatureHash,
-    "text_bm25" -> Oracles.textBm25,
-    "text_bm25_champion" -> Oracles.textBm25Champion,
-    "text_bm25_champ_recall" -> Oracles.textBm25ChampRecall,
-    "text_champ_recall_floor" -> Oracles.textChampRecallFloor,
-    "text_jaccard_champion" -> Oracles.textJaccardChampion,
-    "text_jaccard_champ_recall" -> Oracles.textJaccardChampRecall,
-    "text_jaccard_topk" -> Oracles.textJaccardTopk,
-    "text_jaccard_recall_floor" -> Oracles.textJaccardRecallFloor,
-    "text_jaccard_lsh_topk" -> Oracles.textJaccardLshTopk,
-    "text_jaccard_prefix_topk" -> Oracles.textJaccardPrefixTopk,
-    "text_jaccard_lsh_recall" -> Oracles.textJaccardLshRecall,
-    "text_jaccard_lsh_floor" -> Oracles.textJaccardLshFloor,
-    "text_rrf_fuse" -> Oracles.textRrfFuse,
-    "text_rank_metrics" -> Oracles.textRankMetrics,
-    "text_heaps" -> Oracles.textHeaps,
-    "text_novelty" -> Oracles.textNovelty,
-    "text_zipf" -> Oracles.textZipf,
-    "text_bpe_train" -> Oracles.textBpeTrain,
-    "text_bpe_vocab" -> Oracles.textBpeVocab,
-    "text_bpe_encode" -> Oracles.textBpeEncode,
-    "events_window_agg" -> Oracles.eventsWindowAgg,
-    "events_sliding_window" -> Oracles.eventsSlidingWindow,
-    "events_sessionize" -> Oracles.eventsSessionize,
-    "events_sessionize_typed" -> Oracles.eventsSessionize,
-    "stream_sessionize_replay" -> Oracles.streamSessionizeReplay,
-    "stream_dedupe_replay" -> Oracles.streamDedupeReplay,
-    "stream_window_agg_replay" -> Oracles.streamWindowAggReplay,
-    "stream_join_replay" -> Oracles.streamJoinReplay(inner = true),
-    "stream_left_join_replay" -> Oracles.streamJoinReplay(inner = false),
-    "stream_cdc_replay" -> Oracles.streamCdcReplay,
-    "stream_kll_replay" -> Oracles.qKllQuantiles,
-    "stream_kmv_replay" -> Oracles.qKmvDistinct,
-    "stream_heavy_hitters_replay" -> Oracles.qHeavyHitters,
-    "stream_minhash_replay" -> Oracles.streamMinhashReplay,
-    "stream_drift_replay" -> Oracles.streamDriftReplay,
-    "stream_zscore_replay" -> Oracles.eventsZscoreAlerts,
-    "stream_restart_replay" -> Oracles.streamRestartReplay,
-    "stream_throttle_replay" -> Oracles.streamThrottleReplay,
-    "stream_latedrop_replay" -> Oracles.streamLateDropReplay,
-    "stream_idempotent_sink_replay" ->
-      """SELECT event_id, user_id, event_type, epoch_ms(ts) AS ts_ms,
-        |  CAST(floor(value * 100) AS BIGINT) AS cents FROM events""".stripMargin,
-    "stream_enrich_replay" ->
-      """SELECT event_id, user_id,
-        |  CASE WHEN event_type <> 'error' THEN 'cat_' || event_type END AS category
-        |FROM events""".stripMargin,
-    "stream_topk_replay" ->
-      s"""SELECT event_type, rnk, event_id, cents FROM (
-         |  SELECT event_type, event_id,
-         |    CAST(floor(value * 100) AS BIGINT) AS cents,
-         |    CAST(row_number() OVER (PARTITION BY event_type
-         |      ORDER BY value DESC, event_id) AS BIGINT) AS rnk
-         |  FROM events) WHERE rnk <= ${Params.TopNPerGroup}""".stripMargin,
-    "events_extract" -> Oracles.eventsExtract,
-    "events_json_parse" ->
-      "SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events",
-    "events_pivot" -> Oracles.eventsPivot,
-    "events_asof" -> Oracles.eventsAsof,
-    "events_nearest" -> Oracles.eventsNearest,
-    "events_attribution_markov" -> Oracles.eventsMarkov,
-    "events_transitions" -> Oracles.eventsTransitions,
-    "events_attribution" -> Oracles.eventsAttribution,
-    "events_attribution_decay" -> Oracles.eventsAttributionDecay,
-    "events_rfm" -> Oracles.eventsRfm,
-    "events_stickiness" -> Oracles.eventsStickiness,
-    "events_growth" -> Oracles.eventsGrowth,
-    "events_paths" -> Oracles.eventsPaths,
-    "events_attribution_ushaped" -> Oracles.eventsAttributionUShaped,
-    "etl_fk_audit" -> Oracles.etlFkAudit,
-    "q_lift_table" -> Oracles.qLiftTable,
-    "text_phrase_search" -> Oracles.textPhraseSearch,
-    "events_bursts" -> Oracles.eventsBursts,
-    "events_funnel" -> Oracles.eventsFunnel,
-    "events_funnel_latency" -> Oracles.eventsFunnelLatency,
-    "q_clustering_coef" -> Oracles.qClusteringCoef,
-    "text_gopher_rules" -> Oracles.textGopherRules,
-    "q_kanon" -> Oracles.qKanon,
-    "q_rand_response" -> Oracles.qRandResponse,
-    "q_ldiversity" -> Oracles.qLdiversity,
-    "q_tcloseness" -> Oracles.qTcloseness,
-    "q_winsorize" -> Oracles.qWinsorize,
-    "q_gini" -> Oracles.qGini,
-    "q_ks_test" -> Oracles.qKsTest,
-    "q_mannwhitney" -> Oracles.qMannWhitney,
-    "q_bootstrap" -> Oracles.qBootstrap,
-    "q_bootstrap_ci" -> Oracles.qBootstrapCi,
-    "q_skyline" -> Oracles.qSkyline,
-    "q_share" -> Oracles.qShare,
-    "q_nested_explode" -> Oracles.qNestedExplode,
-    "src_orc_roundtrip" -> Oracles.srcOrcRoundtrip,
-    "src_merge_schema" -> Oracles.srcMergeSchema,
-    "q_full_outer" -> Oracles.qFullOuter,
-    "q_scalar_subquery" -> Oracles.qScalarSubquery,
-    "q_stats_suite" -> Oracles.qStatsSuite,
-    "q_window_suite" -> Oracles.qWindowSuite,
-    "q_cohort_retention" -> Oracles.qCohortRetention,
-    "q_kaplan_meier" -> Oracles.qKaplanMeier,
-    "etl_overwrite_partitions" -> Oracles.etlOverwritePartitions,
-    "q_pct_change" -> Oracles.qPctChange,
-    "q_cohort_ltv" -> Oracles.qCohortLtv,
-    // the merge's oracle IS the full rebuild — incremental must equal it
-    "agg_incremental_merge" -> Oracles.aggIncrementalMerge,
-    "q_pagerank" -> Oracles.qPagerank,
-    "q_pagerank_weighted" -> Oracles.qPagerankWeighted,
-    "q_ppr" -> Oracles.qPpr,
-    "q_hits" -> Oracles.qHits,
-    "q_kcore" -> Oracles.qKcore,
-    "q_assoc_rules" -> Oracles.qAssocRules,
-    "q_triangles" -> Oracles.qTriangles,
-    "q_degree_hist" -> Oracles.qDegreeHist,
-    "q_zorder" -> Oracles.qZorder,
-    "q_hilbert" -> Oracles.qHilbert,
-    "q_hilbert_audit" -> Oracles.qHilbertAudit,
-    "q_jaro_pairs" -> Oracles.qJaroPairs,
-    "q_scc" -> Oracles.qScc,
-    "q_reciprocity" -> Oracles.qReciprocity,
-    "emb_pq_recall_eval" -> Oracles.embPqRecallEval,
-    "ann_mrl_recall_eval" -> Oracles.annMrlRecallEval,
-    "ann_lsh_recall_eval" -> Oracles.annLshRecallEval,
-    "sample_negatives" -> Oracles.sampleNegatives,
-    "q_mutual_info" -> Oracles.qMutualInfo,
-    "q_sql_surface" -> Oracles.qSqlSurface,
-    "q_cramers_v" -> Oracles.qCramersV,
-    "q_odds_ratio" -> Oracles.qOddsRatio,
-    "q_stress" -> Oracles.qStress,
-    "emb_silhouette" -> Oracles.embSilhouette,
-    "q_assortativity" -> Oracles.qAssortativity,
-    "text_langid_confusion" -> Oracles.textLangidConfusion,
-    "sample_kfold" -> Oracles.sampleKfold,
-    "etl_late_dim" -> Oracles.etlLateDim,
-    "etl_wap" -> Oracles.etlWap,
-    "etl_scd2_audit" -> Oracles.etlScd2Audit,
-    "events_bots" -> Oracles.eventsBots,
-    "q_eccentricity" -> Oracles.qEccentricity,
-    "text_burstiness" -> Oracles.textBurstiness,
-    "sample_balance" -> Oracles.sampleBalance,
-    "dim_calendar" -> Oracles.dimCalendar,
-    "etl_surrogate_assign" -> Oracles.etlSurrogateAssign,
-    "q_changepoint" -> Oracles.qChangepoint,
-    "q_psi_drift" -> Oracles.qPsiDrift,
-    "events_zscore_alerts" -> Oracles.eventsZscoreAlerts,
-    "emb_label_silhouette" -> Oracles.embLabelSilhouette,
-    "emb_pca_top" -> Oracles.embPcaTop,
-    "events_interarrival" -> Oracles.eventsInterarrival,
-    "q_lorenz" -> Oracles.qLorenz,
-    "q_fulfillment_latency" -> Oracles.qFulfillmentLatency,
-    "q_abc_class" -> Oracles.qAbcClass,
-    "q_runs_test" -> Oracles.qRunsTest,
-    "q_rolling_corr" -> Oracles.qRollingCorr,
-    "etl_gap_partitions" -> Oracles.etlGapPartitions,
-    "q_quantile_scale" -> Oracles.qQuantileScale,
-    "q_mutual_best" -> Oracles.qMutualBest,
-    "q_profile" -> Oracles.qProfile,
-    "q_bloom_anti" -> Oracles.qBloomAnti,
-    "dedup_containment" -> Oracles.dedupContainment,
-    "etl_quarantine" -> Oracles.etlQuarantine,
-    "q_countmin" -> Oracles.qCountmin,
-    "q_quantile_est" -> Oracles.qQuantileEst,
-    "text_repetition" -> Oracles.textRepetition,
-    "dedup_prefix_filter" -> Oracles.dedupPrefixFilter,
-    "dedup_span_audit" -> Oracles.dedupSpanAudit,
-    "q_heavy_hitters" -> Oracles.qHeavyHitters,
   )
 }

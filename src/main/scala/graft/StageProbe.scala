@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage parallelism probe: runs named queries twice (min over the
   * warm pass) and prints each stage whose wall clock is significant,
@@ -16,21 +15,7 @@ object StageProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args(1).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // mirror Bench's AQE coalescing floor so probed stage widths
-      // match what the bench actually runs (see Bench.scala — default
-      // is Spark's own 1m; 64k measured a net loss on the graph family)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "1m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Logs.quietDeclaredBoundedWindows()
+    val spark = GraftSession.local()
     val stages =
       new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, Int, Long, Long)]()
     spark.sparkContext.addSparkListener(new SparkListener {

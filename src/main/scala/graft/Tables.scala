@@ -33,8 +33,4 @@ object Tables {
 
   def events(spark: SparkSession, dir: String): DataFrame =
     normalizeTs(load(spark, dir, "events"))
-
-  /** Register every table as a temp view (for spark.sql use). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

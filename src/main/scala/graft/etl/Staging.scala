@@ -25,14 +25,6 @@ object Staging {
   def castColumns(df: DataFrame, casts: Map[String, String]): DataFrame =
     casts.foldLeft(df) { case (d, (c, t)) => d.withColumn(c, col(c).cast(t)) }
 
-  /** Keep one row per key, arbitrary pick — the reference's
-    * `dropDuplicates(["tconst"])` (etl_imdb.py:139). Non-deterministic
-    * across runs/engines; prefer [[dedupByKeyKeepFirst]] when downstream
-    * results must be reproducible.
-    */
-  def dedupByKey(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
-
   /** Deterministic key-dedup: keep the first row per key under the
     * (ascending) `order` columns — callers include a unique column to
     * make the order total.

@@ -30,12 +30,6 @@ object VectorFunctions {
   /** L2 norm. */
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity rounded to 4dp (stable under sub-ULP fold-order
-    * differences between engines).
-    */
-  def cosine4(a: Column, b: Column): Column =
-    round(dot(a, b) / (norm(a) * norm(b)), 4)
-
   /** Dot product against a constant weight vector (e.g. an LSH
     * hyperplane) — the weights become a literal array in the plan, so the
     * whole projection stays inside whole-stage codegen with no join.

@@ -80,7 +80,7 @@ object JaroWinklerKernel {
 /** Jaro–Winkler similarity as a native codegen'd expression — the
   * record-linkage scorer for SHORT keys (person/org/product names)
   * where Levenshtein's edit counts over-penalize transpositions.
-  * Complements [[LevenshteinPrefilter]]'s edit-distance family; pair it
+  * Complements the edit-distance family (`levenshtein`); pair it
   * with a blocking join so it only ever scores candidate pairs.
   *
   * A Scala UDF would cost a serialization wall per pair right where

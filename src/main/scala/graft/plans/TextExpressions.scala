@@ -58,8 +58,8 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 }
 
 object TextExpressions {
-  /** Session-level SQL registration (the extensions path in
-    * [[GraftExtensions]] covers `spark.sql.extensions` users).
+  /** Session-level SQL registration: `graft_nfc` and `graft_jaro_winkler`.
+    * Safe to call on any session (idempotent).
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.sessionState.functionRegistry.registerFunction(

@@ -207,8 +207,7 @@ object VectorExpressions {
     ColumnBridge.column(SortedIntersectCount(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** SQL-side registration: `SELECT graft_dot(a, b)`. Safe to call on any
-    * session (idempotent); also installable cluster-wide via
-    * `spark.sql.extensions=graft.plans.GraftExtensions`.
+    * session (idempotent).
     */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.registerFunction(
@@ -217,23 +216,3 @@ object VectorExpressions {
       (children: Seq[Expression]) => DotProduct(children(0), children(1)))
 }
 
-/** `spark.sql.extensions` entry point injecting the graft SQL functions
-  * and optimizer rules.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (children: Seq[Expression]) => NfcNormalize(children(0))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "graft_jaro_winkler"),
-      (children: Seq[Expression]) => JaroWinkler(children(0), children(1))))
-    ext.injectOptimizerRule(_ => LevenshteinPrefilterRule)
-  }
-}

@@ -34,15 +34,6 @@ object Sources {
   def writeJsonl(df: DataFrame, path: String, compression: String = "none"): Unit =
     df.write.mode("overwrite").option("compression", compression).json(path)
 
-  /** Overwrite-mode parquet write with optional partition columns
-    * (reference: etl_imdb.py:238). Partitioning on a low-cardinality key
-    * (yearkey) gives partition pruning to every downstream reader.
-    */
-  def writeParquet(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
-  }
-
   /** Raw binary-file ingestion — Spark's built-in `binaryFile` source,
     * the standard first hop for a multimodal corpus that lands as
     * individual image/audio/video FILES rather than packed tables: one

@@ -111,40 +111,4 @@ class VectorExpressionSpec extends SparkSpec {
       case None => spark.conf.unset(key)
     }
   }
-
-  test("levenshtein prefilter rule injects the implied length guard, once, safely") {
-    import graft.plans.LevenshteinPrefilterRule
-    // a range source so ConvertToLocalRelation can't fold the filter away
-    def src = spark.range(0, 30)
-      .select(concat(lit("k"), (col("id") % 7).cast("string")).as("a"),
-        concat(lit("k"), (col("id") % 3).cast("string"), lit("xx")).as("b"))
-    val df = src.filter(expr("levenshtein(a, b) <= 2"))
-    val before = df.queryExecution.optimizedPlan
-    val after = LevenshteinPrefilterRule(before)
-    assert(after.toString.toLowerCase.contains("abs("),
-      s"guard must be injected:\n$after")
-    // idempotent: a second application (every optimizer iteration) is a no-op
-    assert(LevenshteinPrefilterRule(after).toString === after.toString)
-    // end-to-end with the rule active: results identical to the naive filter
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ LevenshteinPrefilterRule
-    try {
-      val rows = src.filter(expr("levenshtein(a, b) <= 2"))
-      assert(rows.queryExecution.optimizedPlan.toString.toLowerCase.contains("abs("))
-      // identical rows to the guard-free semantics (guard is implied)
-      def lev(a: String, b: String): Int = {
-        val d = Array.tabulate(a.length + 1, b.length + 1)((i, j) =>
-          if (i == 0) j else if (j == 0) i else 0)
-        for (i <- 1 to a.length; j <- 1 to b.length)
-          d(i)(j) = math.min(math.min(d(i - 1)(j) + 1, d(i)(j - 1) + 1),
-            d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
-        d(a.length)(b.length)
-      }
-      val naive = src.collect()
-        .filter(r => lev(r.getString(0), r.getString(1)) <= 2)
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      assert(rows.collect().map(r => (r.getString(0), r.getString(1))).toSet === naive)
-    } finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == LevenshteinPrefilterRule)
-  }
 }

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Regenerate the README operator index from SparkEntry.queries.
 
-Parses the queries map in src/main/scala/graft/SparkEntry.scala: every
+Parses the registry in src/main/scala/graft/SparkEntry.scala (from
+`val registry:` to its closing `  )`): every
 `"key" -> ` entry is listed under the `// ---- ... ----` section it
 appears in, with its SparkEntry line and the operator object(s) its body
 calls (resolved to source files by scanning for `object X`). The block
@@ -25,8 +26,8 @@ for p in glob.glob(os.path.join(ROOT, "src/main/scala/**/*.scala"), recursive=Tr
         obj_file.setdefault(m.group(1), rel)
 
 src = open(ENTRY).read().split("\n")
-q_start = next(i for i, l in enumerate(src) if "def queries:" in l)
-q_end = next(i for i, l in enumerate(src) if "def oracleSql:" in l)
+q_start = next(i for i, l in enumerate(src) if "val registry:" in l)
+q_end = next(i for i in range(q_start, len(src)) if src[i] == "  )")
 
 section = "misc"
 entries = []  # (section, key, line, files)

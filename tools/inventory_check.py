@@ -1,12 +1,13 @@
 #!/usr/bin/env python3
-"""Cross-check the three operator inventories so they cannot drift
+"""Cross-check the query registry against SURVEY §2 so they cannot drift
 (VERDICT r11 task #6):
 
-  1. every key in `SparkEntry.queries` is cited by >= 1 SURVEY §2 row;
+  1. every key in the `SparkEntry.registry` is cited by >= 1 SURVEY §2 row;
   2. every backticked query key a §2 row cites exists in the registry
-     (spec gates — names ending in `Spec` — resolve to test files);
-  3. every query key has an `oracleSql` entry unless it is on the
-     declared rows-only list below.
+     (spec gates — names ending in `Spec` — resolve to test files).
+
+Every registry entry carries its DuckDB oracle, so the compiler (not
+this script) guarantees each query has one.
 
 Exit 0 = consistent; nonzero prints each violation. Run from anywhere:
     python3 tools/inventory_check.py
@@ -17,28 +18,12 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ENTRY = os.path.join(ROOT, "src/main/scala/graft/SparkEntry.scala")
 SURVEY = os.path.join(ROOT, "SURVEY.md")
 
-# rows-only by declared design (no SQL twin exists); every name here must
-# still be cited by a §2 row and carry the declaration in its registration
-ROWS_ONLY = set()
-
 src = open(ENTRY).read().split("\n")
-q_start = next(i for i, l in enumerate(src) if "def queries:" in l)
-q_end = next(i for i, l in enumerate(src) if "def oracleSql:" in l)
+# the registry literal: from `val registry:` to its closing `  )`
+q_start = next(i for i, l in enumerate(src) if "val registry:" in l)
+q_end = next(i for i in range(q_start, len(src)) if src[i] == "  )")
 key_re = re.compile(r'^    "([\w.]+)" ->')
 queries = {m.group(1) for l in src[q_start:q_end] for m in [key_re.match(l)] if m}
-oracles = {m.group(1) for l in src[q_end:] for m in [key_re.match(l)] if m}
-
-# declared rows-only: registration comments saying "rows-only"
-body = "\n".join(src[q_start:q_end])
-for m in re.finditer(r'"([\w.]+)" ->', body):
-    pass
-for name in queries - oracles:
-    # find the registration block and look for a rows-only declaration
-    i = next(j for j in range(q_start, q_end) if key_re.match(src[j]) and
-             key_re.match(src[j]).group(1) == name)
-    blk = "\n".join(src[i:min(i + 12, q_end)])
-    if "rows-only" in blk:
-        ROWS_ONLY.add(name)
 
 sec = open(SURVEY).read()
 s2 = sec.split("## §2", 1)[1].split("\n## ", 1)[0]
@@ -71,13 +56,10 @@ for q in sorted(cited - queries):
     errs.append(f"SURVEY §2 cites `{q}` but SparkEntry.queries has no such key")
 for s in sorted(spec_gates - specs):
     errs.append(f"SURVEY §2 cites spec gate `{s}` but no such test file exists")
-for q in sorted((queries - oracles) - ROWS_ONLY):
-    errs.append(f"query `{q}` has no oracleSql entry and no rows-only declaration")
 for l in label_dups:
     errs.append(f"SURVEY §2 row label `{l}` is used by more than one row")
 
-print(f"queries={len(queries)} oracles={len(oracles)} "
-      f"rows_only_declared={sorted(ROWS_ONLY)} "
+print(f"queries={len(queries)} "
       f"survey_cited={len(cited)} spec_gates={len(spec_gates)}")
 if errs:
     print("\n".join("FAIL: " + e for e in errs))

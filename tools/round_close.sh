@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # Round-close checks: run before the end-of-round commit.
-#  1. inventory_check  — SparkEntry.queries / oracleSql / SURVEY §2 stay 1:1
+#  1. inventory_check  — SparkEntry.registry / SURVEY §2 stay 1:1 (the
+#     compiler keeps every registry entry paired with its oracle)
 #  2. gen_readme_index — README operator index regenerated from the registry
 #  3. reminder of the two measurement gates the driver replays
 set -euo pipefail
